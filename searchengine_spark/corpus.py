@@ -577,14 +577,6 @@ def html_of_spans_py(spans: list[dict]) -> str:
 # DataFrame builders
 # ---------------------------------------------------------------------------
 
-def raw_urls_df(spark: SparkSession, n: int, partitions: int = 32) -> DataFrame:
-    """The synthetic URL universe as a DataFrame: (doc_id, raw_url)."""
-    return (
-        spark.range(0, n, 1, partitions)
-        .withColumnRenamed("id", "doc_id")
-        .withColumn("raw_url", raw_url_expr("doc_id"))
-    )
-
 
 def interleaved_docs_df(
     spark: SparkSession, sf_dir: str, max_doc: int | None = None

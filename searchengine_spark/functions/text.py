@@ -27,11 +27,6 @@ LANG_MARKERS: dict[str, list[str]] = {
 BPE_TOKEN_PATTERN = r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"
 
 
-def words_expr(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    return F.split(c, " ")
-
-
 def token_count_expr(text: Column | str) -> Column:
     """Whitespace token count."""
     c = F.col(text) if isinstance(text, str) else text

@@ -214,20 +214,6 @@ def admit_host_caps(
     return under.unionByName(survivors).drop("_rem", "_cnt")
 
 
-def apply_host_caps(candidates: DataFrame, hosts: DataFrame, cfg: CrawlConfig) -> DataFrame:
-    """Per-host URL cap (MAXURLPERHOST): admit only enough new URLs per
-    host to stay under max_urls_per_host, ranked by url_md5."""
-    quota = hosts.select(
-        "host", (F.lit(cfg.max_urls_per_host) - F.col("url_count")).alias("_rem")
-    )
-    return admit_host_caps(
-        candidates,
-        quota,
-        cfg.max_urls_per_host,
-        order_cols=("url_md5",),
-    )
-
-
 def priority_depth_expr(url) -> "F.Column":
     """Shallow-first frontier priority: path depth of the canonical
     URL ('host/a/b' -> 2, a bare host -> 0) — the classic breadth

@@ -67,10 +67,7 @@ def synth_media_df(spark, sf_dir: str) -> DataFrame:
 
     # spread_scan: single-split small-SF scan would otherwise feed the
     # per-row payload build + mapInPandas decode through one task
-    docs = spread_scan(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"),
-        key=f"{sf_dir}/documents.parquet",
-    )
+    docs = spread_scan(spark.read.parquet(f"{sf_dir}/documents.parquet"))
     d = docs.select(F.col("doc_id").cast("string").alias("doc_id"))
     h = hash60(F.col("doc_id"), "media")
     n_rep = (F.pmod(h, F.lit(6)) + 1).cast("int")  # 16..96 payload bytes

@@ -149,16 +149,6 @@ def pagerank(
     )
 
 
-def rank_stats(ranks: DataFrame) -> DataFrame:
-    """min/max/avg refinement stats (SearchEngine.cpp:1267-1281)."""
-    return ranks.agg(
-        F.round(F.min("rank"), 6).alias("min_rank"),
-        F.round(F.max("rank"), 6).alias("max_rank"),
-        F.round(F.avg("rank"), 6).alias("avg_rank"),
-        F.count("*").alias("n_nodes"),
-    )
-
-
 def weighted_pagerank(
     edges: DataFrame,
     iters: int = 3,
@@ -442,35 +432,41 @@ def neighborhood_function(
     array<bigint> over the shared hash60, so the DuckDB oracle
     reproduces it bit-for-bit).
 
-    Sweep r: S_r(v) = bottomk(S_{r-1}(v) ∪ ⋃_{(v,u)∈E} S_{r-1}(u)),
-    S_0(v) = {hash60(v)}. Bottom-k truncation is exactly mergeable, so
-    the final sketch equals the bottom-k of the true reachable set; a
-    final sketch shorter than k IS the exact distinct count (nothing
-    was ever dropped — a drop implies >= k smaller survivors).
+    Sweep r over adj = E ∪ {(v,v) : v ∈ nodes}:
+    S_r(v) = bottomk(⋃_{(v,u)∈adj} S_{r-1}(u)), S_0(v) = {hash60(v)}.
+    This equals the textbook S_{r-1}(v) ∪ ⋃_{(v,u)∈E} S_{r-1}(u): with a
+    self-loop at every hashed node, a walk of length r reaches exactly
+    the nodes a path of length <= r reaches (pad a shorter path with
+    self-loops at its end). An edge source outside `nodes` has no
+    self-loop, yet loses nothing: its sketch is the union over its
+    out-neighbours, and every sketch only grows from sweep to sweep.
+    Bottom-k truncation is exactly mergeable, so the final sketch
+    equals the bottom-k of the true reachable set; a final sketch
+    shorter than k IS the exact distinct count (nothing was ever
+    dropped — a drop implies >= k smaller survivors).
     Estimate: exact size below k, else floor((k-1)·2^60 / kth) — the
     KMV estimator in operators/sketches.py, floor for portability.
 
-    Scale shape: radius shuffles keyed on node, each carrying <= k
-    longs per row — the ONLY way to get r-hop neighborhood sizes on a
-    10^10-node graph (exact per-node BFS is quadratic blowup; this is
-    O(radius · |E| · k) with partial map-side merges). Per-node reach
-    at small radius is the standard centrality/spam feature
-    (link-farm neighborhoods balloon at r=2-3).
+    Scale shape: one join and one aggregate per hop, both keyed on
+    node, each row carrying <= k longs; `sk` is read once per sweep, so
+    the plan grows linearly in radius, not 2^radius. The ONLY way to
+    get r-hop neighborhood sizes on a 10^10-node graph (exact per-node
+    BFS is quadratic blowup; this is O(radius · |E| · k) with partial
+    map-side merges). Per-node reach at small radius is the standard
+    centrality/spam feature (link-farm neighborhoods balloon at r=2-3).
     """
     from ..functions.hashes import hash60
 
     h0 = hash60(F.col("node").cast("string"))
     sk = nodes.select("node", F.array(h0).alias("kmv"))
+    adj = edges.select("src", "dst").unionByName(
+        nodes.select(F.col("node").alias("src"), F.col("node").alias("dst"))
+    )
     bottomk = lambda c: F.slice(F.array_distinct(F.array_sort(c)), 1, k)
     for _ in range(radius):
-        nbr = (
-            edges.select("src", "dst")
-            .join(sk.withColumnRenamed("node", "dst"), "dst")
-            .select(F.col("src").alias("node"), "kmv")
-        )
         sk = (
-            sk.unionByName(nbr)
-            .groupBy("node")
+            adj.join(sk.withColumnRenamed("node", "dst"), "dst")
+            .groupBy(F.col("src").alias("node"))
             .agg(bottomk(F.flatten(F.collect_list("kmv"))).alias("kmv"))
         )
     below = F.size("kmv") < k

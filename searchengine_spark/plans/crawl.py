@@ -60,12 +60,6 @@ MAXHOSTTRY = 10  # SearchEngine.h:18
 # over COMPACT_CHAIN rounds (Iceberg: rewrite_data_files cadence)
 COMPACT_CHAIN = 16
 
-HOSTS_SCHEMA = (
-    "host string, next_allowed_round int, fail_count int, "
-    "fetch_count int, url_count long, robots_state string, ip string, "
-    "robots_checked_round int, crawl_delay int"
-)
-
 METRICS_SCHEMA = (
     "round int, shard int, scheduled long, candidates long, "
     "admitted long, new_urls long, wall_sec double"
@@ -228,10 +222,6 @@ class SyntheticFetchAdapter:
             _pseudo_ip_expr(F.col("host")).alias("ip"),
             F.lit(0).alias("crawl_delay"),
         )
-
-
-def _empty_hosts(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], HOSTS_SCHEMA)
 
 
 @dataclass
@@ -1214,11 +1204,11 @@ class CrawlDriver:
             return self.store.commit(filter_table_name(cfg), blocks2, meta=meta)
 
         def _commit_metrics() -> int:
-            # wall_sec in the metrics ROW is captured at digest time —
-            # the round's compute wall; the commit tail it can no longer
-            # include is visible in the caller's RoundStats.wall_sec.
-            # Nothing downstream consumes the column (telemetry only).
-            wall = time.time() - t0
+            # wall_sec in the metrics ROW is `wall`, read on the calling
+            # thread right after _digest() — the round's compute wall; the
+            # commit tail it can no longer include is visible in the
+            # caller's RoundStats.wall_sec. Nothing downstream consumes
+            # the column (telemetry only).
             metrics_rows = [
                 (
                     round_no,
@@ -1259,6 +1249,7 @@ class CrawlDriver:
                 "hosts": _pool.submit(_commit_hosts),
             }
             _digest()
+            wall = time.time() - t0
             _fb = {
                 "frontier": _pool.submit(_commit_frontier),
                 "seen": _pool.submit(_commit_seen),

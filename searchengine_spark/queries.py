@@ -50,14 +50,9 @@ QCFG = CrawlConfig(n_shards=NSHARDS, per_shard_quota=5, shard_salt=SALT)
 # ---------------------------------------------------------------------------
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # spread_scan: a small-SF documents.parquet is ONE split — without
-    # it every per-row-heavy catalog query runs its whole expression
-    # chain in the scan stage's single task (guide §2.5; measured
-    # dedup_simhash 8.7 s -> 3.2 s warm at sf0.1/local[32])
-    return spread_scan(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"),
-        key=f"{sf_dir}/documents.parquet",
-    )
+    """The raw scan; a consumer whose per-row chain is heavy wraps it in
+    spread_scan (measured per consumer — see spread_scan)."""
+    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 def _candidates_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -829,7 +824,7 @@ _POSTINGS_CTES = """
 
 
 def _postings(spark, sf_dir):
-    return IX.build_postings(_docs(spark, sf_dir))
+    return IX.build_postings(spread_scan(_docs(spark, sf_dir)))
 
 
 def _e(col, scale: int):
@@ -892,7 +887,7 @@ def _weighted_sections(spark, sf_dir):
     style amplifier (doc_id%7==3 -> <h1> x4.0, %7==5 -> <b> x2.0,
     %7==1 -> bold-inside-<h2> x(1.5*2.0) — SearchEngine.cpp:307,
     455-457), so style weights have driver-verified work to do."""
-    d = _docs(spark, sf_dir)
+    d = spread_scan(_docs(spark, sf_dir))
     w = F.split(F.col("text"), " ")
     extra = F.when(
         F.col("doc_id") % 29 == 0,
@@ -1171,7 +1166,7 @@ def _search_small_sql(terms: list[str], k: int = 50) -> str:
 def q_search_2term(spark, sf_dir):
     """J4/A8/O3/A9 over the weighted dict: boundary-rule expansion,
     PosRanks top-2 per (doc, term), min-posdiff proximity co-rank."""
-    docs_meta = _docs(spark, sf_dir).select(
+    docs_meta = spread_scan(_docs(spark, sf_dir)).select(
         "doc_id", F.col("source").alias("host")
     )
     p = _wpostings_blocks(spark, sf_dir, sorted_output=False)
@@ -1289,12 +1284,12 @@ _SHINGLES_SQL = (
 
 def _docs_neardup_aug(spark, sf_dir):
     """Original docs + truncated near-duplicates for doc_id%17==0."""
-    d = _docs(spark, sf_dir).select(
+    d = spread_scan(_docs(spark, sf_dir)).select(
         F.col("doc_id").cast("string").alias("doc_id"), "text"
     )
     w = F.split(F.col("text"), " ")
     nd = (
-        _docs(spark, sf_dir)
+        spread_scan(_docs(spark, sf_dir))
         .where(F.col("doc_id") % 17 == 0)
         .select(
             F.concat(F.lit("nd"), F.col("doc_id").cast("string")).alias("doc_id"),
@@ -1459,12 +1454,7 @@ SQL_DEDUP_NGRAM_JACCARD = (
 # ---------------------------------------------------------------------------
 
 def _emb(spark, sf_dir):
-    # spread_scan: same single-split issue as _docs — ANN queries run
-    # per-row dot products / bucket hashes over the whole table
-    return spread_scan(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
-        key=f"{sf_dir}/embeddings.parquet",
-    ).select(
+    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
 
@@ -1581,7 +1571,7 @@ def q_ann_ivf(spark, sf_dir):
     cosine re-rank. The oracle twin runs the SAME unrolled iterations
     in pure SQL, so the coarse quantizer itself is hash-verified, not
     just the final ranking."""
-    e = _emb(spark, sf_dir)
+    e = spread_scan(_emb(spark, sf_dir))
     q = e.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
@@ -1715,7 +1705,7 @@ SQL_ANN_IVF = _ivf_sql()
 # ---------------------------------------------------------------------------
 
 def q_text_stats(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = spread_scan(_docs(spark, sf_dir))
     return d.select(
         "doc_id",
         TX.token_count_expr("text").alias("n_tokens"),
@@ -1739,7 +1729,7 @@ FROM documents ORDER BY doc_id
 
 def q_lang_id(spark, sf_dir):
     return (
-        _docs(spark, sf_dir)
+        spread_scan(_docs(spark, sf_dir))
         .select("doc_id", TX.lang_guess_expr("text").alias("lang_guess"))
         .groupBy("lang_guess")
         .agg(F.count("*").alias("n_docs"))
@@ -1760,7 +1750,7 @@ def q_lm_perplexity(spark, sf_dir):
     outlier docs surface as the high-avg_nll_e6 tail). Exact BIGINT
     micro-nats end-to-end: the per-bigram logprob is floored to e6
     BEFORE the per-doc sum, so both engines sum identical integers."""
-    d = _docs(spark, sf_dir)
+    d = spread_scan(_docs(spark, sf_dir))
     model = LM.fit_bigram_lm(d)
     return LM.score_bigram_lm(d, model).orderBy("doc_id")
 
@@ -1805,7 +1795,7 @@ def q_lm_kn_perplexity(spark, sf_dir):
     add-one baseline — same fixed-point BIGINT micro-nat contract, the
     per-bigram probability is one IEEE division of integer-assembled
     operands (D = 3/4 as a 4x-scaling; see operators/lm.py)."""
-    d = _docs(spark, sf_dir)
+    d = spread_scan(_docs(spark, sf_dir))
     model = LM.fit_kn_bigram_lm(d, min_count=2)
     return LM.score_kn_bigram_lm(d, model).orderBy("doc_id")
 
@@ -1866,7 +1856,7 @@ FROM kn_scored GROUP BY doc_id ORDER BY doc_id
 
 def q_fingerprint(spark, sf_dir):
     return (
-        _docs(spark, sf_dir)
+        spread_scan(_docs(spark, sf_dir))
         .select("doc_id", TX.fingerprint_expr("text").alias("fingerprint"))
         .orderBy("doc_id")
     )
@@ -2394,7 +2384,9 @@ SEARCH3 = ["join", "sort", "batch"]
 def q_search_3term(spark, sf_dir):
     """J4 with k=3 over the weighted dict: three-way inner join on doc,
     chained adjacent-pair min-posdiff proximity."""
-    docs_meta = _docs(spark, sf_dir).select("doc_id", F.col("source").alias("host"))
+    docs_meta = spread_scan(_docs(spark, sf_dir)).select(
+        "doc_id", F.col("source").alias("host")
+    )
     p = _wpostings_blocks(spark, sf_dir, sorted_output=False)
     return IX.search_weighted(p, SEARCH3, docs_meta, k=50)
 
@@ -2440,7 +2432,9 @@ def q_search_phrase(spark, sf_dir):
         sections, sorted_output=False, blocks_col="blocks", token_stream=stream
     )
     toks = stream.select("doc_id", "word", "position")
-    docs_meta = _docs(spark, sf_dir).select("doc_id", F.col("source").alias("host"))
+    docs_meta = spread_scan(_docs(spark, sf_dir)).select(
+        "doc_id", F.col("source").alias("host")
+    )
     return IX.search_query(
         p, f'"{" ".join(SEARCH_PHRASE)}"', docs_meta, k=50, tokens=toks
     )
@@ -2493,7 +2487,9 @@ def q_search_boundary(spark, sf_dir):
     prefixes whose next char is not a letter (URL tokens host1.com,
     host19.org, ...), and PosRanks top-2 aggregates multi-word
     expansions per doc."""
-    docs_meta = _docs(spark, sf_dir).select("doc_id", F.col("source").alias("host"))
+    docs_meta = spread_scan(_docs(spark, sf_dir)).select(
+        "doc_id", F.col("source").alias("host")
+    )
     p = _wpostings_blocks(spark, sf_dir, sorted_output=False)
     return IX.search_weighted(p, [BOUNDARY_TERM], docs_meta, k=50)
 
@@ -2513,7 +2509,9 @@ def q_search_smallterm(spark, sf_dir):
     words <= SMALLWORDSIZE probe the 8-byte small dict first and use
     its exact-match range when non-empty, falling back to the main
     dict's prefix+boundary expansion otherwise."""
-    docs_meta = _docs(spark, sf_dir).select("doc_id", F.col("source").alias("host"))
+    docs_meta = spread_scan(_docs(spark, sf_dir)).select(
+        "doc_id", F.col("source").alias("host")
+    )
     # r6: the routed search is single-lineage (operators/index._routed_top2
     # fuses the main batch, the small-dict arm and the presence probe
     # into ONE tagged pass), so the shared_postings barrier that used to
@@ -2580,7 +2578,9 @@ def q_search_batch(spark, sf_dir):
     a query_id column). The serve-one-query reference re-walks its
     dict per request (PageSearcher.cpp:400-440); a batch tier pays the
     dict scan once."""
-    docs_meta = _docs(spark, sf_dir).select("doc_id", F.col("source").alias("host"))
+    docs_meta = spread_scan(_docs(spark, sf_dir)).select(
+        "doc_id", F.col("source").alias("host")
+    )
     p = _wpostings_blocks(spark, sf_dir, sorted_output=False)
     return IX.search_weighted_batch(p, BATCH_SEARCH, docs_meta, k=50).orderBy(
         "query_id", F.desc("score"), "doc_id"
@@ -2655,7 +2655,9 @@ def q_search_batch_joined(spark, sf_dir):
     batch size (the per-branch form grows linearly and tops out at
     hundreds of queries/batch). Same oracle as search_batch: the two
     tiers are semantically identical by construction."""
-    docs_meta = _docs(spark, sf_dir).select("doc_id", F.col("source").alias("host"))
+    docs_meta = spread_scan(_docs(spark, sf_dir)).select(
+        "doc_id", F.col("source").alias("host")
+    )
     p = _wpostings_blocks(spark, sf_dir, sorted_output=False)
     qdf = IX.queries_table(spark, BATCH_SEARCH)
     return IX.search_batch_joined(p, qdf, docs_meta, k=50).orderBy(
@@ -2743,7 +2745,7 @@ def q_quality_classifier(spark, sf_dir):
     needs no model file."""
     from searchengine_spark.operators import curation as CU
 
-    docs = _docs(spark, sf_dir)
+    docs = spread_scan(_docs(spark, sf_dir))
     w = CU.synthetic_weights(spark)
     return CU.linear_classifier_score(docs, w).orderBy("doc_id")
 
@@ -3004,7 +3006,7 @@ def q_decontaminate(spark, sf_dir):
     (doc_id % DECON_BENCH_MOD == 0), with overlap fraction and a
     >= 50% flag.
     Broadcast hash-set join — see operators/curation.py scale notes."""
-    return CU.decontaminate(_docs(spark, sf_dir)).orderBy("doc_id")
+    return CU.decontaminate(spread_scan(_docs(spark, sf_dir))).orderBy("doc_id")
 
 
 SQL_DECONTAMINATE = (
@@ -3024,7 +3026,7 @@ def q_quality_repetition(spark, sf_dir):
     """Gopher-style duplicate-n-gram fractions + pass flag, computed
     as one shuffle-free codegen'd projection (operators/curation.py
     repetition_stats)."""
-    return CU.repetition_stats(_docs(spark, sf_dir)).orderBy("doc_id")
+    return CU.repetition_stats(spread_scan(_docs(spark, sf_dir))).orderBy("doc_id")
 
 
 SQL_QUALITY_REPETITION = f"""
@@ -3087,7 +3089,7 @@ def q_pii_redact(spark, sf_dir):
     """PII scrub pass: per-rule match counts on the raw text plus the
     md5 + length of the redacted text (the redaction itself is a pure
     chained-regexp_replace projection — operators/curation.py)."""
-    d = _docs(spark, sf_dir).select(
+    d = spread_scan(_docs(spark, sf_dir)).select(
         "doc_id", _pii_text_expr().alias("pii_text")
     )
     return d.select(
@@ -3179,7 +3181,7 @@ def q_curation_funnel(spark, sf_dir):
     re-appears under doc_id+1_000_000) so the dedup stage has real
     work, mirroring _docs_exactdup_aug but keeping doc_id numeric for
     the benchmark-membership residue and `source` for sampling."""
-    base = _docs(spark, sf_dir).select("doc_id", "text", "source")
+    base = spread_scan(_docs(spark, sf_dir)).select("doc_id", "text", "source")
     d = base.unionByName(
         base.where(F.col("doc_id") % 10 == 0).select(
             (F.col("doc_id") + 1_000_000).alias("doc_id"), "text", "source"
@@ -3294,7 +3296,7 @@ def q_mixture_budget(spark, sf_dir):
     per-source window over all docs), summarized per source. The
     derived budgets span downsampling (×0.25/×0.6), exact fit (×1.0)
     and multi-epoch upsampling (×2.5)."""
-    per_doc = CU.mixture_assign(_docs(spark, sf_dir))
+    per_doc = CU.mixture_assign(spread_scan(_docs(spark, sf_dir)))
     return (
         per_doc.groupBy("source")
         .agg(
@@ -3392,7 +3394,7 @@ def q_embedding_clusters(spark, sf_dir):
     (members, exact integer inertia, min-id exemplar) — the clustering
     step of a curation pipeline; shares the hash-verified coarse
     quantizer with ann_ivf (operators/similarity.embedding_clusters)."""
-    return SIM.embedding_clusters(_emb(spark, sf_dir)).orderBy("cid")
+    return SIM.embedding_clusters(spread_scan(_emb(spark, sf_dir))).orderBy("cid")
 
 
 SQL_EMBEDDING_CLUSTERS = (
@@ -4085,7 +4087,7 @@ def q_collocations(spark, sf_dir):
     from searchengine_spark.operators.lm import pmi_collocations
 
     return pmi_collocations(
-        _docs(spark, sf_dir), min_count=5, k=20
+        spread_scan(_docs(spark, sf_dir)), min_count=5, k=20
     ).orderBy("rank")
 
 
@@ -4199,7 +4201,7 @@ def q_textrank_keywords(spark, sf_dir):
     corpus bigram count, self-loops dropped); top-20 by rank."""
     from searchengine_spark.operators.pagerank import textrank_keywords
 
-    return textrank_keywords(_docs(spark, sf_dir), k=20, iters=3).orderBy(
+    return textrank_keywords(spread_scan(_docs(spark, sf_dir)), k=20, iters=3).orderBy(
         "pos"
     )
 
@@ -4491,7 +4493,7 @@ def q_boilerplate(spark, sf_dir):
     The corpus is word soup, so the query injects the classic per-site
     footer into 90% of each source's docs (deterministic doc_id % 10
     augmentation, twinned in SQL) — the operator must find exactly it."""
-    docs = _docs(spark, sf_dir).select("doc_id", "source", "text")
+    docs = spread_scan(_docs(spark, sf_dir)).select("doc_id", "source", "text")
     aug = docs.withColumn(
         "text",
         F.when(

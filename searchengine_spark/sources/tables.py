@@ -2,48 +2,30 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
 
-# split counts per (path-ish key, parallelism): a PLAN property (how many
-# splits the scan planner produced), not data — catalog queries re-derive
-# the same scan many times per query and the count cannot change mid-run
-_SPLITS_MEMO: dict[tuple[str, int], int] = {}
 
+def spread_scan(df: DataFrame) -> DataFrame:
+    """Round-robin a scan to cluster width when it has fewer splits than
+    cores (optimization guide §2.5 "input skew", miniature form); a
+    no-op (zero added exchange) once the scan carries >= cores splits,
+    as it does at production scale.
 
-def spread_scan(df: DataFrame, key: str | None = None) -> DataFrame:
-    """Scale-adaptive scan spreading (optimization guide §2.5 "input
-    skew": one unsplittable input, miniature form). A small-SF table is
-    ONE parquet split (a sub-row-group file cannot be split), so every
-    heavy per-row expression chain above the scan — simhash bit votes,
-    minhash windows, the getWords tokenizer — runs inside the scan
-    stage's only task while the rest of the cluster idles. Round-robin
-    repartition to cluster width, ONLY when the scan has fewer splits
-    than cores: at production scale the scan already carries thousands
-    of splits and this is a no-op (zero added exchange). Rows are
-    unchanged (round-robin with Spark's sort-before-repartition keeps
-    the assignment deterministic under retries), so every oracle twin
-    hashes identically."""
-    sc = df.sparkSession.sparkContext
-    p = sc.defaultParallelism
-    memo_key = (key, p) if key is not None else None
-    if memo_key is not None and memo_key in _SPLITS_MEMO:
-        n = _SPLITS_MEMO[memo_key]
-    else:
-        n = df.rdd.getNumPartitions()
-        if memo_key is not None:
-            _SPLITS_MEMO[memo_key] = n
-    return df.repartition(p) if n < p else df
-
-
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
+    The caller decides. A small-SF table is ONE parquet split, so a
+    heavy per-row chain above the scan runs in the scan stage's only
+    task; the spread buys parallelism for that chain at the price of
+    one exchange per read. It pays only where the chain is still
+    heavy: at sf0.1/local[4] (median warm wall), lm_perplexity runs
+    3.87 s spread vs 7.21 s raw and dedup_minhash 5.97 vs 7.12 s, while
+    dedup_simhash (an Arrow kernel) runs 1.38 s raw vs 1.93 s spread,
+    and graph_reach's cheap aggregates paid the exchange at every
+    reference (2.53 vs 3.42 s). Rows are unchanged (round-robin with
+    Spark's sort-before-repartition keeps the assignment deterministic
+    under retries), so every oracle twin hashes identically."""
+    p = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(p) if df.rdd.getNumPartitions() < p else df

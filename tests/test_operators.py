@@ -3,6 +3,7 @@ pagerank, index/search, multimodal plumbing."""
 
 import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from searchengine_spark.operators import dedup as DD
@@ -1425,6 +1426,78 @@ def test_neighborhood_function_exact_below_k_and_estimates(spark):
     # below k still holds for singleton reach
     assert est["d"]["reach_est"] == 1 and est["d"]["kth_min"] is None
     assert est["a"]["kth_min"] is not None and est["a"]["reach_est"] >= 1
+
+
+def _neighborhood_union_form(edges, nodes, radius, k):
+    """The per-hop union sweep neighborhood_function replaced, kept as
+    the reference: S_r(v) = bottomk(S_{r-1}(v) ∪ ⋃_{(v,u)∈E} S_{r-1}(u)),
+    with the same estimator."""
+    from searchengine_spark.functions.hashes import hash60
+
+    sk = nodes.select(
+        "node", F.array(hash60(F.col("node").cast("string"))).alias("kmv")
+    )
+    bottomk = lambda c: F.slice(F.array_distinct(F.array_sort(c)), 1, k)
+    for _ in range(radius):
+        nbr = (
+            edges.select("src", "dst")
+            .join(sk.withColumnRenamed("node", "dst"), "dst")
+            .select(F.col("src").alias("node"), "kmv")
+        )
+        sk = (
+            sk.unionByName(nbr)
+            .groupBy("node")
+            .agg(bottomk(F.flatten(F.collect_list("kmv"))).alias("kmv"))
+        )
+    below = F.size("kmv") < k
+    kth = F.element_at("kmv", k)
+    est = F.floor(
+        F.lit(float(k - 1)) * F.lit(float(1 << 60)) / kth.cast("double")
+    ).cast("long")
+    return sk.select(
+        "node",
+        F.when(below, F.size("kmv").cast("long")).otherwise(est).alias("reach_est"),
+        F.when(below, F.lit(None).cast("long")).otherwise(kth).alias("kth_min"),
+    )
+
+
+@st.composite
+def _small_graphs(draw):
+    """Nodes drawn from 0..7, edge endpoints from 0..10 (8..10 are never
+    nodes), plus forced cases: an edge into and an edge out of a
+    non-node, a duplicated edge and an isolated node (11)."""
+    nodes = sorted(draw(st.sets(st.integers(0, 7), min_size=1, max_size=8)))
+    ids = st.integers(0, 10)
+    edges = draw(st.lists(st.tuples(ids, ids), max_size=16))
+    v = nodes[0]
+    edges += [(v, 9), (10, v), (10, 9)]
+    edges.append(edges[0])
+    return nodes + [11], edges
+
+
+@pytest.mark.parametrize("radius", [0, 1, 2, 3, 4])
+@given(graph=_small_graphs())
+@settings(max_examples=2, deadline=None)
+def test_neighborhood_function_equals_union_form(spark, radius, graph):
+    """The self-loop sweep (one join + one aggregate per hop) yields the
+    same estimate per node as the union form at k in {2, 3, 16}, on
+    graphs with non-node endpoints, isolated nodes and duplicate edges."""
+    node_ids, edge_ids = graph
+    nodes = spark.createDataFrame([(n,) for n in node_ids], "node long")
+    edges = spark.createDataFrame(edge_ids, "src long, dst long")
+
+    def rows(nf):
+        # one action per form: the three k's ride in one union
+        per_k = [
+            nf(edges, nodes, radius, k).withColumn("k", F.lit(k))
+            for k in (2, 3, 16)
+        ]
+        out = per_k[0].unionByName(per_k[1]).unionByName(per_k[2]).collect()
+        return sorted(map(tuple, out))
+
+    want = rows(_neighborhood_union_form)
+    got = rows(lambda e, n, r, k: PR.neighborhood_function(e, n, radius=r, k=k))
+    assert got == want
 
 
 def test_band_range_join_equals_naive(spark):

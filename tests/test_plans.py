@@ -2,6 +2,8 @@
 filters and projections reach the parquet scan, small dims broadcast,
 seen-dedup with bloom equals the exact anti-join."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -367,3 +369,35 @@ def test_catalog_plan_audit_invariants(spark):
     )
     cartesian = {n: a["cartesian"] for n, a in audit.items() if a["cartesian"]}
     assert not cartesian, f"CartesianProduct in catalog plans: {cartesian}"
+
+
+# every shuffle and broadcast exchange, the round-robin spread included
+_EXCHANGE = re.compile(r"Exchange (hash|range|Single|RoundRobin)|BroadcastExchange")
+
+
+def test_graph_reach_exchanges_linear_in_radius(spark):
+    """neighborhood_function reads its sketch once per hop (one join and
+    one aggregate over edges ∪ self-loops), and graph_reach reads the
+    raw documents scan: the executed plan stays linear in radius (the
+    per-hop union form with a spread scan executed 119 exchanges)."""
+    from searchengine_spark.queries import QUERIES
+
+    # a frame an earlier query left cached (pagerank caches its edges,
+    # the same plan as graph_reach's) would swap in an InMemoryRelation
+    # whose printed plan carries its own exchanges
+    spark.catalog.clearCache()
+    df = QUERIES["graph_reach"](spark, SF)
+    df.collect()
+    n = len(_EXCHANGE.findall(_plan(df)))
+    assert n <= 24, f"graph_reach executed {n} exchanges"
+
+
+def test_spread_is_the_consumers_decision(spark):
+    """sf0.001's documents table is one split, so a spread shows in the
+    plan: the shared reader stays raw, and only the consumers whose
+    per-row chain is heavy (LM scoring, minhash signatures) spread."""
+    from searchengine_spark import queries as Q
+
+    assert "RoundRobinPartitioning" not in _plan(Q._docs(spark, SF))
+    for name in ("lm_perplexity", "dedup_minhash"):
+        assert "RoundRobinPartitioning" in _plan(Q.QUERIES[name](spark, SF)), name

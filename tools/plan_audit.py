@@ -38,9 +38,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 PLAN_NODE_PATTERNS = {
     # "Exchange hashpartitioning(...)" / "Exchange rangepartitioning(...)"
-    # (AQE wraps these but the initial plan prints them bare); exclude
+    # / "Exchange RoundRobinPartitioning(...)" (a scan spread; AQE wraps
+    # these but the initial plan prints them bare); exclude
     # BroadcastExchange which we count separately.
-    "exchanges": re.compile(r"(?<!Broadcast)Exchange (hash|range|Single)"),
+    "exchanges": re.compile(r"(?<!Broadcast)Exchange (hash|range|Single|RoundRobin)"),
     "broadcasts": re.compile(r"BroadcastExchange"),
     "smj": re.compile(r"SortMergeJoin"),
     "bhj": re.compile(r"BroadcastHashJoin"),
