@@ -108,7 +108,11 @@ def pagerank(
         # delta checks re-read the previous sweep's ranks: keep both
         # sides materialized and lineage flat
         ranks = ranks.localCheckpoint(eager=True)
-    edges = edges.cache()
+    # every sweep re-reads the edges: a lazy local checkpoint computes
+    # them once on first use and stays private to this call (a cache()
+    # would register the plan with the session's CacheManager, where
+    # any later query over the same edge plan would pick it up)
+    edges = edges.localCheckpoint(eager=False)
     for i in range(n_iter):
         contribs = (
             edges.join(ranks, edges.src == ranks.node, "inner")

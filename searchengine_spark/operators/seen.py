@@ -8,23 +8,25 @@ partitioned bloom prefilter:
 
 * blocks table: one bitmap per host-shard, built with `applyInPandas`
   over the seen table grouped by shard (numpy bit ops, Arrow batches);
-* probe: candidates test their shard's bitmap via a broadcast of the
-  blocks (n_shards × bits/8 bytes — e.g. 2000 shards × 8 KiB = 16 MiB);
-  bloom-negative candidates are *definitely new* and skip the exact
-  anti-join; only bloom-positive candidates (true hits + false
-  positives) shuffle into the exact `left_anti` against `seen`.
+* probe: native SQL. Candidates left-join their shard's block and test
+  k bits of it with byte/bit expressions; the planner chooses the join
+  by size (the block table broadcasts while it is small, e.g. 16 shards
+  x 8 KiB, and shuffles on `shard` at scale). Bloom-negative candidates
+  are *definitely new* and skip the exact anti-join; only bloom-positive
+  candidates (true hits + false positives) shuffle into the exact
+  `left_anti` against `seen`.
 
 Exactness is therefore preserved (bloom is a prefilter, never the
 verdict — SURVEY.md §7.4-3) while the shuffled side of the hot J1 join
 shrinks by roughly the new-URL fraction, which at steady-state crawl is
 the dominant fraction.
 
-Bit positions come from non-overlapping 15-hex windows of the
-(uniformly distributed) url_md5 key, computed as NATIVE columns
-(`conv(substr(md5,…),16,10) % nbits`) so no per-row Python runs
-anywhere on the J1 hot path; the pandas UDFs that remain are pure
-vectorized numpy bitmap gathers over Arrow batches. The pure-Python
-twin (_bit_positions) keeps the oracle/tests in lockstep.
+Bit positions come from overlapping 15-hex windows of the (uniformly
+distributed) url_md5 key, computed as NATIVE columns
+(`conv(substr(md5,…),16,10) % nbits`), so the probe runs no Python at
+all; Python runs only in the block build and merge, once per shard.
+The pure-Python twin (_bit_positions) keeps the oracle/tests in
+lockstep.
 """
 
 from __future__ import annotations
@@ -106,85 +108,18 @@ def merge_bloom_blocks(a: DataFrame, b: DataFrame, cfg: CrawlConfig) -> DataFram
     )
 
 
-# Above this many TOTAL filter-block bytes (a pure function of the
-# CONFIGURED geometry — n_shards x per-shard structure size, no data
-# peek) the prefilter stops collecting blocks to the driver and
-# switches to the shard-cogrouped probe: each task reads ONLY its own
-# shard's block. Rationale (r6, VERDICT "What's wrong" #1): a
-# 10^10-URL seen set needs ~12.5 GB of bitmap total, which the
-# broadcast path would materialize on the driver and ship whole to
-# every executor — the prefilter would die first at 100x scale. Below
-# the bound the broadcast is strictly cheaper (no candidate shuffle),
-# so the sandbox bench shape is unchanged. Env-overridable so tests
-# pin both arms equal on the same data.
-FILTER_BROADCAST_MAX_BYTES = 64 << 20
-
-
-def _broadcast_max_bytes() -> int:
-    import os
-
-    return int(
-        os.environ.get("SEEN_FILTER_BROADCAST_MAX", FILTER_BROADCAST_MAX_BYTES)
-    )
-
-
-def _bloom_blocks_bytes(cfg: CrawlConfig) -> int:
-    return cfg.n_shards * (cfg.bloom_bits_per_shard // 8)
-
-
-def _bloom_prefilter_cogrouped(
-    candidates: DataFrame, blocks: DataFrame, cfg: CrawlConfig
-) -> DataFrame:
-    """Shard-co-partitioned bloom probe — the at-scale arm: candidates
-    cogroup with their shard's single block row, so no block ever
-    touches the driver and each task holds exactly one shard's bitmap
-    (the reference's per-shard exact sets, SearchEngine.h:517-522,
-    never cross shards either). Missing block => suspect, same rule as
-    the broadcast arm."""
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    k = cfg.bloom_hashes
-    pos_names = [f"_bp{i}" for i in range(k)]
-    cand = candidates
-    for name, col in zip(pos_names, bloom_position_cols(F.col("url_md5"), cfg)):
-        cand = cand.withColumn(name, col)
-    out_schema = StructType(
-        list(candidates.schema.fields) + [StructField("maybe_seen", BooleanType())]
-    )
-    out_cols = [f.name for f in out_schema.fields]
-
-    def probe(cdf: pd.DataFrame, bdf: pd.DataFrame) -> pd.DataFrame:
-        if len(cdf) == 0:
-            return pd.DataFrame(columns=out_cols)
-        if len(bdf) == 0:
-            cdf = cdf.copy()
-            cdf["maybe_seen"] = True  # no block: suspect (exact-join path)
-            return cdf[out_cols]
-        bm = np.frombuffer(bdf["bitmap"].iloc[0], dtype=np.uint8)
-        pos = np.column_stack(
-            [cdf[n].to_numpy(dtype=np.int64) for n in pos_names]
-        )
-        hit = (((bm[pos >> 3] >> (pos & 7)) & 1) != 0).all(axis=1)
-        cdf = cdf.copy()
-        cdf["maybe_seen"] = hit
-        return cdf[out_cols]
-
-    return (
-        cand.groupBy("shard")
-        .cogroup(blocks.groupBy("shard"))
-        .applyInPandas(probe, schema=out_schema)
-    )
-
-
 def bloom_prefilter(
     spark: SparkSession, candidates: DataFrame, blocks: DataFrame, cfg: CrawlConfig
 ) -> DataFrame:
     """Tag candidates with maybe_seen; bloom-negatives are exact-new.
 
-    The UDF body is a vectorized numpy bitmap gather over Arrow
-    batches — the k bit positions arrive as native columns, so no
-    hex-parsing or per-row Python runs here (the last per-row loop on
-    the J1 hot path, removed per the round-2 verdict).
+    Native SQL, no Python: candidates left-join their shard's block,
+    and each of the k positions from :func:`bloom_position_cols` tests
+    bit `pos % 8` of byte `pos div 8` of the bitmap — the byte and bit
+    order of :func:`build_bloom_blocks`'s numpy scatter. The planner
+    picks the join strategy by size: a block table under the broadcast
+    threshold ships whole to every task, a larger one shuffles the
+    candidates on `shard`, and no block ever passes through the driver.
 
     A shard with NO bitmap returns maybe_seen=True (suspect), routing
     those rows through the exact anti-join. Under a consistent config
@@ -192,42 +127,27 @@ def bloom_prefilter(
     costs a no-op join probe; under config drift (e.g. a resume with a
     different n_shards) False would silently skip the exact check —
     a dedup-exactness violation caught live in round-3 verification.
-
-    Scale dispatch (r6): beyond _broadcast_max_bytes() of configured
-    block geometry the whole-map collect+broadcast below is replaced by
-    the shard-cogrouped probe (same rows, pinned by
-    tests/test_plans.py::test_seen_filter_cogroup_matches_broadcast).
     """
-    if _bloom_blocks_bytes(cfg) > _broadcast_max_bytes():
-        return _bloom_prefilter_cogrouped(candidates, blocks, cfg)
-    block_map = {
-        r["shard"]: np.frombuffer(r["bitmap"], dtype=np.uint8)
-        for r in blocks.collect()
-    }
-    bc = spark.sparkContext.broadcast(block_map)
-
-    @F.pandas_udf("boolean")
-    def probe(shards: pd.Series, *pos_cols: pd.Series) -> pd.Series:
-        blocks_local = bc.value
-        sh = shards.to_numpy(dtype=np.int64)
-        n = len(sh)
-        if n == 0:
-            return pd.Series(np.zeros(0, dtype=bool))
-        pos = np.column_stack([p.to_numpy(dtype=np.int64) for p in pos_cols])
-        out = np.ones(n, dtype=bool)  # default: suspect (exact-join path)
-        for s in np.unique(sh):
-            bm = blocks_local.get(int(s))
-            if bm is None:
-                continue
-            m = sh == s
-            p = pos[m]
-            out[m] = (((bm[p >> 3] >> (p & 7)) & 1) != 0).all(axis=1)
-        return pd.Series(out)
-
-    return candidates.withColumn(
-        "maybe_seen",
-        probe(F.col("shard"), *bloom_position_cols(F.col("url_md5"), cfg)),
-    )
+    bitmap = F.col("_bloom_bitmap")
+    all_set = F.lit(True)
+    for pos in bloom_position_cols(F.col("url_md5"), cfg):
+        byte = F.conv(
+            F.hex(F.substr(bitmap, F.shiftright(pos, 3) + 1, F.lit(1))), 16, 10
+        )
+        # (shiftright's Python wrapper takes only a literal shift)
+        bit = F.call_function("shiftright", byte.cast("int"), pos.bitwiseAND(7))
+        all_set = all_set & (bit.bitwiseAND(1) == 1)
+    maybe_seen = bitmap.isNull() | all_set
+    # the null filter is the one the optimizer infers for the
+    # definitely-new branch (where the left join turns inner); stating
+    # it keeps both branches' block sides identical, so they share one
+    # broadcast or shuffle of the block table
+    blocks = blocks.where(F.col("shard").isNotNull() & F.col("bitmap").isNotNull())
+    return candidates.join(
+        blocks.select("shard", F.col("bitmap").alias("_bloom_bitmap")),
+        "shard",
+        "left",
+    ).select(*candidates.columns, maybe_seen.alias("maybe_seen"))
 
 
 def dedup_seen_with_bloom(

@@ -216,12 +216,18 @@ class SearchService:
                 pool.submit(self.store.commit, "postings", self._postings, meta=meta),
                 pool.submit(self.store.commit, "tokens", self._tokens, meta=meta),
                 pool.submit(self.store.commit, "anchors", self._anchors, meta=a_meta),
-                pool.submit(
-                    self.store.commit, "postings_small", self._small, meta=meta
-                ),
             ]
+            small_fut = pool.submit(
+                self.store.commit, "postings_small", self._small, meta=meta
+            )
             for f in futs:
                 f.result()
+            small_version = small_fut.result()
+        # serve the small dict from its committed snapshot: the cached
+        # frame's lineage roots in `unsorted`, so an evicted block would
+        # re-run the whole tokenize pipeline once it is unpersisted
+        self._small.unpersist()
+        self._small = self.store.read("postings_small", small_version).cache()
         stream.unpersist()
         unsorted.unpersist()
         pr.unpersist()

@@ -49,6 +49,25 @@ QCFG = CrawlConfig(n_shards=NSHARDS, per_shard_quota=5, shard_salt=SALT)
 # shared derivations
 # ---------------------------------------------------------------------------
 
+_SCRATCH_ROOT: str | None = None
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A fresh directory for a one-shot query's materialized stage,
+    under one per-process root that is removed at interpreter exit (the
+    lazy reads that follow a query keep needing it until then)."""
+    global _SCRATCH_ROOT
+    import tempfile
+
+    if _SCRATCH_ROOT is None:
+        import atexit
+        import shutil
+
+        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="se_queries_")
+        atexit.register(shutil.rmtree, _SCRATCH_ROOT, True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
+
+
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The raw scan; a consumer whose per-row chain is heavy wraps it in
     spread_scan (measured per consumer — see spread_scan)."""
@@ -392,15 +411,13 @@ def _digest_round(spark, sf_dir):
     digest queries; run_round persists this stage through
     cache_handles, and the one-shot catalog twin materializes it to a
     tmp parquet instead (caching is banned here, CLAUDE.md rule)."""
-    import tempfile
-
     from searchengine_spark.plans.crawl import _fetch_fails_expr
     from searchengine_spark.corpus import fetch_spans_expr
 
     docs = _docs(spark, sf_dir)
     max_doc = docs.count()
     raw = docs.select(raw_url_expr("doc_id").alias("raw_url"))
-    pdir = tempfile.mkdtemp(prefix="se_digest_") + "/cand_pre"
+    pdir = _scratch_dir("se_digest_") + "/cand_pre"
     FR.normalize_candidates(raw, DIGCFG).write.parquet(pdir)
     cand_pre = spread_scan(spark.read.parquet(pdir))
     hostcnt = cand_pre.groupBy("host").agg(F.count("*").alias("url_count"))
@@ -508,8 +525,6 @@ def q_crawl_round_digest(spark, sf_dir):
     to a tmp parquet and read back — otherwise every digest branch
     (candidate count, admission, dedup chain) re-runs the parse UDF
     (~35 Arrow evals in the final plan before this)."""
-    import tempfile
-
     cand_pre, hostcnt, frontier, fetched, ok = _digest_round(spark, sf_dir)
     outlinks = ok.select(
         F.explode(
@@ -519,7 +534,7 @@ def q_crawl_round_digest(spark, sf_dir):
             )
         ).alias("raw_url")
     )
-    cdir = tempfile.mkdtemp(prefix="se_digest_") + "/cnd"
+    cdir = _scratch_dir("se_digest_") + "/cnd"
     FR.normalize_candidates(outlinks, DIGCFG).write.parquet(cdir)
     cnd = spread_scan(spark.read.parquet(cdir))
     remaining = hostcnt.select(
@@ -3790,10 +3805,8 @@ def q_warc_roundtrip(spark, sf_dir):
     FROM THE PARSED RECORDS (group key comes out of the X-SE metadata
     headers, bytes out of the payload blocks). The oracle computes the
     same aggregates straight from the original parquet: round trip ≡
-    identity is the assertion. Export goes to a fresh tmpdir per call
-    (left for the lazy read; OS tmp reaping collects it)."""
-    import tempfile
-
+    identity is the assertion. Export goes to a fresh scratch dir per
+    call (left for the lazy read; removed at interpreter exit)."""
     from searchengine_spark.sources import warc as WARC
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -3803,7 +3816,7 @@ def q_warc_roundtrip(spark, sf_dir):
         F.col("lang"),
         F.col("source"),
     )
-    out_dir = tempfile.mkdtemp(prefix="se_warc_rt_")
+    out_dir = _scratch_dir("se_warc_rt_")
     WARC.warc_export(
         docs, out_dir, key_col="doc_key", uri_col="uri", payload_col="text",
         meta_cols=["lang", "source"],
@@ -4328,14 +4341,12 @@ def q_host_pagerank(spark, sf_dir):
     with a stored docs column; every consumer (both projection joins,
     the node set, each rank sweep) now scans 8 KB of parquet instead
     of re-running the parse."""
-    import tempfile
-
     cand_src = (
         _candidates_df(spark, sf_dir)
         .select(F.col("doc_id").alias("node"), F.col("host").alias("part"))
         .distinct()
     )
-    mdir = tempfile.mkdtemp(prefix="se_hostpr_") + "/mapping"
+    mdir = _scratch_dir("se_hostpr_") + "/mapping"
     cand_src.write.parquet(mdir)
     cand = spark.read.parquet(mdir)
     edges = _synth_edges(spark, sf_dir)

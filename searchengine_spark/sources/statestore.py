@@ -13,6 +13,13 @@ immutable snapshot subdirs ``v000001/``, ``v000002/`` … plus a
 A crash between snapshot write and pointer rename leaves the previous
 snapshot live — same all-or-nothing visibility as an Iceberg commit.
 
+A commit with `partition_by` hash-distributes its rows on the partition
+columns before the write (Iceberg's default distribution mode for
+partitioned tables), so a snapshot holds one file per partition value
+rather than one per input split and value: the crawl frontier's 16
+`storage_bucket=` directories get 16 files a round, not hundreds.
+Unpartitioned commits write their input's layout unchanged.
+
 Appends are FAST-appends: a new version writes only its delta files
 plus a file-list manifest referencing the base version's data dirs —
 O(delta) per commit, exactly Iceberg's append shape (new data files +
@@ -49,6 +56,19 @@ def _iceberg_available(spark: SparkSession) -> bool:
         return True
     except Exception:
         return False
+
+
+def _writer(df: DataFrame, partition_by: list[str] | None):
+    """A partitioned commit clusters rows by their partition key first
+    (Iceberg's default `write.distribution-mode=hash`): a `rebalance`
+    on the key puts each partition value in one task, so the snapshot
+    holds one file per value instead of one per input split per value,
+    and AQE splits a value only past the advisory partition size.
+    Unpartitioned commits keep their input layout (index `postings`
+    relies on its range-sorted order)."""
+    if not partition_by:
+        return df.write
+    return df.hint("rebalance", *partition_by).write.partitionBy(*partition_by)
 
 
 class TableStore:
@@ -219,10 +239,9 @@ class TableStore:
                 )
             # write delta + file-list manifest into tmp, then one rename
             delta_rel = os.path.join(table, f"v{nxt:06d}", "delta")
-            writer = df.write
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.mode("overwrite").parquet(os.path.join(tmp, "delta"))
+            _writer(df, partition_by).mode("overwrite").parquet(
+                os.path.join(tmp, "delta")
+            )
             has_rows = any(
                 name.endswith(".parquet")
                 for _, _, names in os.walk(os.path.join(tmp, "delta"))
@@ -235,10 +254,7 @@ class TableStore:
             with open(os.path.join(tmp, "_files.json"), "w") as f:
                 json.dump(files, f)
         else:
-            writer = df.write
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.mode("overwrite").parquet(tmp)
+            _writer(df, partition_by).mode("overwrite").parquet(tmp)
         with open(os.path.join(tmp, "_schema.json"), "w") as f:
             json.dump(stored_schema.jsonValue(), f)
         os.rename(tmp, out)

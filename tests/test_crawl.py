@@ -189,6 +189,22 @@ def test_incremental_bloom_equals_full_rebuild(engine_state):
     assert got == want
 
 
+def test_frontier_snapshot_one_file_per_bucket(engine_state):
+    """A round's frontier commit clusters rows by storage bucket: the
+    pinned snapshot holds at most one parquet file per bucket dir, not
+    one per input split per bucket."""
+    import glob
+    import os
+
+    driver, _ = engine_state
+    version = driver.store.read_manifest()["versions"]["frontier"]
+    snap = driver.store.snapshot_path("frontier", version)
+    buckets = glob.glob(os.path.join(snap, "storage_bucket=*"))
+    assert buckets
+    for b in buckets:
+        assert len(glob.glob(os.path.join(b, "*.parquet"))) <= 1, b
+
+
 def test_content_type_gate(spark):
     """P8 (httpDownload.h:12-14,48-63): only text/html / html survive."""
     from pyspark.sql import functions as F

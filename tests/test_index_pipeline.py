@@ -107,6 +107,9 @@ def test_search_service_end_to_end(crawled):
     assert crawled.store.exists("postings")
     assert crawled.store.exists("postings_small")
     assert crawled.store.exists("tokens")
+    # the served small dict reads its committed snapshot, so an evicted
+    # cache block never re-runs the (unpersisted) tokenize pipeline
+    assert svc._small.sameSemantics(crawled.store.read("postings_small"))
 
 
 def test_console_parameter_surface(crawled):

@@ -296,15 +296,18 @@ def test_shared_postings_barrier_survives_optimizer(spark):
 
 
 def test_seen_filter_cogroup_matches_broadcast(spark, monkeypatch):
-    """The r6 scale dispatch of the seen-filter prefilters: above the
-    configured-geometry byte bound, the driver collect+broadcast of the
-    block map is replaced by a shard-cogrouped probe (VERDICT r5 "What's
-    wrong" #1 — the broadcast path would materialize ~12.5 GB of bitmap
-    on the driver at 10^10 URLs). Both arms must tag IDENTICAL rows,
-    and the exact dedup through the cogroup arm must equal the plain
-    anti-join, for bloom AND cuckoo, including a shard with no block."""
+    """The scale dispatch of the seen-filter prefilters. Cuckoo: above
+    the configured-geometry byte bound, the driver collect+broadcast of
+    the block map is replaced by a shard-cogrouped probe (VERDICT r5
+    "What's wrong" #1 — the broadcast path would materialize gigabytes
+    of blocks on the driver at 10^10 URLs). Bloom: the probe is a
+    native join whose strategy the planner picks, so its two arms are
+    the broadcast join and, with broadcasts off, the shuffle join on
+    `shard`. Both arms must tag IDENTICAL rows, and the exact dedup
+    through either must equal the plain anti-join, including a shard
+    with no block."""
     from searchengine_spark.operators import seen as SN
-    from searchengine_spark.operators.cuckoo import dedup_seen_with_cuckoo
+    from searchengine_spark.operators.cuckoo import cuckoo_prefilter, dedup_seen_with_cuckoo
 
     n = 400
     cand = spark.range(n).select(
@@ -318,34 +321,73 @@ def test_seen_filter_cogroup_matches_broadcast(spark, monkeypatch):
         r["url_md5"]
         for r in cand.join(seen.select("url_md5"), "url_md5", "left_anti").collect()
     )
-    for flt in ("bloom", "cuckoo"):
-        cfg = CrawlConfig(n_shards=7, seen_filter=flt)
-        blocks = SN.build_filter_blocks(seen.where(F.col("shard") != 6), cfg)
-        fn = dedup_seen_with_bloom if flt == "bloom" else dedup_seen_with_cuckoo
-        monkeypatch.setenv("SEEN_FILTER_BROADCAST_MAX", str(1 << 40))
-        via_bc = sorted(r["url_md5"] for r in fn(spark, cand, seen, blocks, cfg).collect())
-        monkeypatch.setenv("SEEN_FILTER_BROADCAST_MAX", "0")
-        via_cg = sorted(r["url_md5"] for r in fn(spark, cand, seen, blocks, cfg).collect())
-        assert via_bc == via_cg == expected, flt
-        # and the cogroup arm's tagged sets match the broadcast arm's
-        if flt == "bloom":
-            tag_cg = SN.bloom_prefilter(spark, cand, blocks, cfg)
-        else:
-            from searchengine_spark.operators.cuckoo import cuckoo_prefilter
+    sh6 = {r["url_md5"] for r in cand.where(F.col("shard") == 6).collect()}
 
-            tag_cg = cuckoo_prefilter(spark, cand, blocks, cfg)
-        monkeypatch.setenv("SEEN_FILTER_BROADCAST_MAX", str(1 << 40))
-        if flt == "bloom":
-            tag_bc = SN.bloom_prefilter(spark, cand, blocks, cfg)
-        else:
-            tag_bc = cuckoo_prefilter(spark, cand, blocks, cfg)
-        got_cg = sorted((r["url_md5"], r["maybe_seen"]) for r in tag_cg.collect())
-        got_bc = sorted((r["url_md5"], r["maybe_seen"]) for r in tag_bc.collect())
-        assert got_cg == got_bc, flt
-        # no block => every shard-6 candidate is a suspect in both arms
-        suspects = {m for m, s in got_cg if s}
-        sh6 = {r["url_md5"] for r in cand.where(F.col("shard") == 6).collect()}
-        assert sh6 <= suspects, flt
+    cfg = CrawlConfig(n_shards=7, seen_filter="bloom")
+    blocks = SN.build_filter_blocks(seen.where(F.col("shard") != 6), cfg)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    arms = []
+    try:
+        for threshold in (old, "-1"):
+            spark.conf.set(key, threshold)
+            dedup = sorted(
+                r["url_md5"]
+                for r in dedup_seen_with_bloom(spark, cand, seen, blocks, cfg).collect()
+            )
+            tagged = sorted(
+                (r["url_md5"], r["maybe_seen"])
+                for r in SN.bloom_prefilter(spark, cand, blocks, cfg).collect()
+            )
+            arms.append((dedup, tagged))
+    finally:
+        spark.conf.set(key, old)
+    (via_bc, got_bc), (via_sh, got_sh) = arms
+    assert via_bc == via_sh == expected
+    assert got_bc == got_sh
+    assert sh6 <= {m for m, s in got_bc if s}
+
+    flt = "cuckoo"
+    cfg = CrawlConfig(n_shards=7, seen_filter=flt)
+    blocks = SN.build_filter_blocks(seen.where(F.col("shard") != 6), cfg)
+    fn = dedup_seen_with_cuckoo
+    monkeypatch.setenv("SEEN_FILTER_BROADCAST_MAX", str(1 << 40))
+    via_bc = sorted(r["url_md5"] for r in fn(spark, cand, seen, blocks, cfg).collect())
+    monkeypatch.setenv("SEEN_FILTER_BROADCAST_MAX", "0")
+    via_cg = sorted(r["url_md5"] for r in fn(spark, cand, seen, blocks, cfg).collect())
+    assert via_bc == via_cg == expected, flt
+    # and the cogroup arm's tagged sets match the broadcast arm's
+    tag_cg = cuckoo_prefilter(spark, cand, blocks, cfg)
+    monkeypatch.setenv("SEEN_FILTER_BROADCAST_MAX", str(1 << 40))
+    tag_bc = cuckoo_prefilter(spark, cand, blocks, cfg)
+    got_cg = sorted((r["url_md5"], r["maybe_seen"]) for r in tag_cg.collect())
+    got_bc = sorted((r["url_md5"], r["maybe_seen"]) for r in tag_bc.collect())
+    assert got_cg == got_bc, flt
+    # no block => every shard-6 candidate is a suspect in both arms
+    suspects = {m for m, s in got_cg if s}
+    assert sh6 <= suspects, flt
+
+
+def test_bloom_dedup_runs_no_python(spark, tmp_path):
+    """The crawl round reads its bloom blocks from the store, and the
+    probe over them is native SQL: the executed dedup plan carries no
+    Python evaluator of any kind."""
+    cfg = CrawlConfig(n_shards=4)
+    cand = spark.range(300).select(
+        F.md5(F.col("id").cast("string")).alias("url_md5"),
+        F.pmod(F.col("id"), F.lit(4)).cast("int").alias("shard"),
+    )
+    seen = cand.where("id % 3 = 0")
+    build_bloom_blocks(seen, cfg).write.parquet(str(tmp_path / "bloom"))
+    blocks = spark.read.parquet(str(tmp_path / "bloom"))
+    out = dedup_seen_with_bloom(spark, cand, seen, blocks, cfg)
+    assert out.count() == 200
+    out.collect()
+    plan = _plan(out)
+    for node in ("ArrowEvalPython", "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas"):
+        assert node not in plan, (node, plan)
+    # the small stored block table is broadcast, once for both branches
+    assert "BroadcastHashJoin" in plan and "ReusedExchange" in plan, plan
 
 
 def test_catalog_plan_audit_invariants(spark):
@@ -382,14 +424,42 @@ def test_graph_reach_exchanges_linear_in_radius(spark):
     per-hop union form with a spread scan executed 119 exchanges)."""
     from searchengine_spark.queries import QUERIES
 
-    # a frame an earlier query left cached (pagerank caches its edges,
-    # the same plan as graph_reach's) would swap in an InMemoryRelation
-    # whose printed plan carries its own exchanges
-    spark.catalog.clearCache()
     df = QUERIES["graph_reach"](spark, SF)
     df.collect()
     n = len(_EXCHANGE.findall(_plan(df)))
     assert n <= 24, f"graph_reach executed {n} exchanges"
+
+
+def test_pagerank_leaves_no_cached_frame(spark):
+    """pagerank reuses its edges across sweeps through a checkpoint
+    private to the call: nothing is left in the session's CacheManager
+    for a later query with the same edge plan to pick up."""
+    from searchengine_spark.queries import QUERIES
+
+    spark.catalog.clearCache()  # earlier tests in the session may cache
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    QUERIES["pagerank3"](spark, SF).collect()
+    assert cache_manager.isEmpty()
+
+
+def test_query_scratch_dirs_share_one_root(spark):
+    """One-shot queries that materialize a stage write it under one
+    per-process scratch root (removed at interpreter exit): a second run
+    adds nothing to the temp dir outside that root."""
+    import os
+    import tempfile
+
+    from searchengine_spark import queries as Q
+
+    def entries():
+        return {e for e in os.listdir(tempfile.gettempdir()) if e.startswith("se_")}
+
+    Q.QUERIES["host_pagerank"](spark, SF).collect()
+    before, inside = entries(), set(os.listdir(Q._SCRATCH_ROOT))
+    Q.QUERIES["host_pagerank"](spark, SF).collect()
+    assert entries() == before
+    assert os.path.dirname(Q._SCRATCH_ROOT) == tempfile.gettempdir()
+    assert len(set(os.listdir(Q._SCRATCH_ROOT)) - inside) == 1
 
 
 def test_spread_is_the_consumers_decision(spark):

@@ -171,3 +171,20 @@ def test_append_onto_zero_row_base(spark, tmp_path):
     st.commit("t", df.limit(0), partition_by=["bucket"])
     st.commit("t", df, mode="append", partition_by=["bucket"])
     assert [(r["id"], r["bucket"]) for r in st.read("t").collect()] == [(1, 3)]
+
+
+def test_partitioned_commit_writes_one_file_per_value(spark, tmp_path):
+    """A partitioned commit clusters rows by the partition key first:
+    input spread over 8 splits still lands as ONE parquet file per
+    partition value, in overwrite and append commits alike."""
+    import glob
+
+    st = TableStore(spark, str(tmp_path))
+    df = spark.range(0, 400, 1, 8).selectExpr("id", "cast(id % 5 as int) AS bucket")
+    st.commit("t", df, partition_by=["bucket"])
+    st.commit("t", df, mode="append", partition_by=["bucket"])
+    for snap in ("v000001", "v000002/delta"):
+        for b in range(5):
+            files = glob.glob(str(tmp_path / "t" / snap / f"bucket={b}" / "*.parquet"))
+            assert len(files) == 1, (snap, b, files)
+    assert st.read("t", version=1).count() == 400
