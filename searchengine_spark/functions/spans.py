@@ -277,20 +277,3 @@ def resolve_href_expr(base, href) -> F.Column:
 @F.pandas_udf(SPANS_TYPE)
 def extract_spans_udf(html: pd.Series) -> pd.Series:
     return html.map(extract_spans_py)
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def extract_links_udf(url: pd.Series, spans: pd.Series) -> pd.Series:
-    """spans + page url -> per-page-deduped raw outlink URLs."""
-    out = []
-    for u, sp in zip(url, spans):
-        seen: set[str] = set()
-        links: list[str] = []
-        for s in (sp if sp is not None else []):
-            if s["kind"] == "link" and s["media_ref"]:
-                r = resolve_href_py(u, s["media_ref"])
-                if r is not None and r not in seen:
-                    seen.add(r)
-                    links.append(r)
-        out.append(links)
-    return pd.Series(out)

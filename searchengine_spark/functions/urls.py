@@ -485,8 +485,3 @@ def make_parse_candidates_udf():
     # pins exactly one evaluation; it only disables optimizations, never
     # changes results.
     return parse.asNondeterministic()
-
-
-@F.pandas_udf(T.StringType())
-def registered_domain_udf(host: pd.Series) -> pd.Series:
-    return _registered_domain_series(host)

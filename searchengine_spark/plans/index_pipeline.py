@@ -211,23 +211,27 @@ class SearchService:
         # phase above — its commit below writes from the warm cache)
         meta = {"kind": "index"}
         a_meta = {"kind": "index", "docs_version": self._docs_version()}
+        served = {"postings": self._postings, "tokens": self._tokens,
+                  "postings_small": self._small}
         with ThreadPoolExecutor(max_workers=4) as pool:
-            futs = [
-                pool.submit(self.store.commit, "postings", self._postings, meta=meta),
-                pool.submit(self.store.commit, "tokens", self._tokens, meta=meta),
-                pool.submit(self.store.commit, "anchors", self._anchors, meta=a_meta),
-            ]
-            small_fut = pool.submit(
-                self.store.commit, "postings_small", self._small, meta=meta
+            futs = {
+                t: pool.submit(self.store.commit, t, df, meta=meta)
+                for t, df in served.items()
+            }
+            anchors_fut = pool.submit(
+                self.store.commit, "anchors", self._anchors, meta=a_meta
             )
-            for f in futs:
-                f.result()
-            small_version = small_fut.result()
-        # serve the small dict from its committed snapshot: the cached
-        # frame's lineage roots in `unsorted`, so an evicted block would
-        # re-run the whole tokenize pipeline once it is unpersisted
-        self._small.unpersist()
-        self._small = self.store.read("postings_small", small_version).cache()
+            versions = {t: f.result() for t, f in futs.items()}
+            anchors_fut.result()
+        # serve postings, tokens and the small dict from their committed
+        # snapshots: the cached frames' lineage roots in `unsorted` and
+        # `stream`, so an evicted block would re-run the whole tokenize
+        # pipeline once those are unpersisted
+        for df in served.values():
+            df.unpersist()
+        self._postings, self._tokens, self._small = (
+            self.store.read(t, versions[t]).cache() for t in served
+        )
         stream.unpersist()
         unsorted.unpersist()
         pr.unpersist()

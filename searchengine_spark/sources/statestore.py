@@ -188,7 +188,17 @@ class TableStore:
                             `compact()` (the crawl driver triggers it
                             by chain length, inside the round's
                             manifest transaction).
+                            Unpartitioned tables only: a partitioned
+                            chain would be one multi-root parquet load
+                            that cannot resolve its partition columns,
+                            so it is refused before anything is written.
         """
+        if mode == "append" and partition_by:
+            raise ValueError(
+                f"append to table {table!r} with partition_by={partition_by}: "
+                "fast-append supports unpartitioned tables only; commit a "
+                "partitioned table with mode='overwrite'"
+            )
         os.makedirs(self._tdir(table), exist_ok=True)
         prev = self.latest_version(table)
         nxt = prev + 1

@@ -11,7 +11,9 @@ Plus the capability bloom lacks: delete-one-occurrence.
 import dataclasses
 import hashlib
 
+import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from searchengine_spark.config import CrawlConfig
@@ -81,14 +83,106 @@ def test_no_false_negatives_under_stash_overflow(spark):
     ids = list(range(400))
     blocks = CK.build_cuckoo_blocks(_keys_df(spark, ids, TINY), TINY).cache()
     # the tiny table really did overflow into the stash
-    import numpy as np
-
     stash_items = sum(
         len(np.frombuffer(r["stash"], dtype=np.uint32)) for r in blocks.collect()
     )
     assert stash_items > 0
     assert _probe_set(spark, blocks, ids, TINY) == set(ids)
     blocks.unpersist()
+
+
+def _probe_np(shards, fp, i1, i2, block_map):
+    """The numpy reference probe (the pandas UDF the native probe
+    replaced): bucket-1, bucket-2, then a sorted-stash search; a
+    missing block => suspect."""
+    out = np.ones(len(shards), dtype=bool)
+    packed = (np.minimum(i1, i2).astype(np.uint32) << np.uint32(16)) | fp.astype(
+        np.uint32
+    )
+    for s in np.unique(shards):
+        blk = block_map.get(int(s))
+        if blk is None:
+            continue
+        slots2d, stash = blk
+        m = shards == s
+        f16 = fp[m].astype(np.uint16)[:, None]
+        hit = (slots2d[i1[m]] == f16).any(axis=1)
+        hit |= (slots2d[i2[m]] == f16).any(axis=1)
+        if len(stash):
+            pos = np.minimum(np.searchsorted(stash, packed[m]), len(stash) - 1)
+            hit |= stash[pos] == packed[m]
+        out[m] = hit
+    return out
+
+
+md5s = st.binary(min_size=16, max_size=16).map(bytes.hex)
+
+
+@given(
+    big=st.lists(md5s, max_size=40),
+    few=st.lists(md5s, min_size=1, max_size=3),
+    dup=md5s,
+    seed=st.integers(0, 1 << 32),
+    fresh=st.lists(st.tuples(md5s, st.integers(0, 3)), max_size=40),
+    nb=st.sampled_from([8, 32]),
+    bsize=st.sampled_from([2, 4]),
+)
+@settings(max_examples=6, deadline=None)
+def test_native_probe_equals_numpy_probe(
+    spark, big, few, dup, seed, fresh, nb, bsize
+):
+    """The native probe tags every candidate exactly as the numpy
+    probe does. Shard 0 holds random keys plus one key inserted
+    2*bsize + 2 times, so its stash always carries a duplicate packed
+    entry; shard 1 holds 1 to 3 keys, so its stash is empty; shard 2
+    holds 16 more keys than it has slots, so its stash always holds
+    keys whose fingerprint sits in neither bucket; shard 3 has no
+    block. Checked under the default join and with broadcasts off."""
+    cfg = dataclasses.replace(
+        CFG, cuckoo_buckets_per_shard=nb, cuckoo_bucket_size=bsize
+    )
+    overload = [
+        hashlib.md5(f"{seed}:{i}".encode()).hexdigest()
+        for i in range(nb * bsize + 16)
+    ]
+    seen = (
+        [(m, 0) for m in big + [dup] * (2 * bsize + 2)]
+        + [(m, 1) for m in few]
+        + [(m, 2) for m in overload]
+    )
+    schema = "url_md5 string, shard int"
+    blocks = CK.build_cuckoo_blocks(spark.createDataFrame(seen, schema), cfg).cache()
+    block_map = {
+        r["shard"]: (
+            np.frombuffer(r["slots"], dtype=np.uint16).reshape(-1, bsize),
+            np.frombuffer(r["stash"], dtype=np.uint32),
+        )
+        for r in blocks.collect()
+    }
+    stash0 = block_map[0][1]
+    assert len(stash0) > len(np.unique(stash0))
+    assert len(block_map[1][1]) == 0 and 3 not in block_map
+    assert len(block_map[2][1]) >= 16
+    rows = seen + fresh
+    keys = np.array([CK.cuckoo_key_py(m, cfg) for m, _ in rows], dtype=np.int64)
+    shards = np.array([s for _, s in rows], dtype=np.int64)
+    expect = _probe_np(shards, keys[:, 0], keys[:, 1], keys[:, 2], block_map)
+    assert expect[: len(seen)].all()  # no false negatives
+    expected = sorted(zip(range(len(rows)), expect.tolist()))
+    cand = spark.createDataFrame(
+        [(m, s, i) for i, (m, s) in enumerate(rows)], schema + ", i long"
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        for threshold in (old, "-1"):
+            spark.conf.set(key, threshold)
+            tagged = CK.cuckoo_prefilter(spark, cand, blocks, cfg)
+            got = sorted((r["i"], r["maybe_seen"]) for r in tagged.collect())
+            assert got == expected, threshold
+    finally:
+        spark.conf.set(key, old)
+        blocks.unpersist()
 
 
 def test_dedup_with_cuckoo_equals_exact(spark):

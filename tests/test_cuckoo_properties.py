@@ -7,7 +7,7 @@ Invariants fuzzed over random key multisets and geometries:
   keys (the two-round placement drops nothing and duplicates nothing);
 * no false negatives — every inserted (bucket, fp) pair is findable in
   bucket-1, bucket-2 or the stash (the pure-python probe twin below
-  mirrors cuckoo_prefilter's UDF body);
+  follows cuckoo_prefilter's membership rule);
 * front-compaction — every bucket holds its occupied slots before its
   empty slots (the _place append contract);
 * delete-one — deleting k occurrences of an inserted key removes
@@ -39,7 +39,7 @@ keys = st.lists(
 
 
 def _probe_py(slots2d, stash, bucket, fp, mask):
-    """Pure-python twin of the probe UDF body for one key."""
+    """Pure-python twin of cuckoo_prefilter's test for one key."""
     b2 = bucket ^ ((fp * CK.ALT_MULT) & mask)
     if fp in slots2d[bucket] or fp in slots2d[b2]:
         return True

@@ -107,9 +107,22 @@ def test_search_service_end_to_end(crawled):
     assert crawled.store.exists("postings")
     assert crawled.store.exists("postings_small")
     assert crawled.store.exists("tokens")
-    # the served small dict reads its committed snapshot, so an evicted
-    # cache block never re-runs the (unpersisted) tokenize pipeline
-    assert svc._small.sameSemantics(crawled.store.read("postings_small"))
+    # postings, tokens and the small dict are served from their
+    # committed snapshots, so an evicted cache block never re-runs the
+    # (unpersisted) tokenize pipeline: with every served cache dropped,
+    # search returns the same rows
+    served = {"postings": svc._postings, "tokens": svc._tokens,
+              "postings_small": svc._small}
+    for t, df in served.items():
+        assert df.sameSemantics(crawled.store.read(t)), t
+    key = lambda r: (r["doc_id"], r["score"], r["host"], r["url"])
+    queries = ("page body", '"page body"', "pag*")
+    before = [sorted(map(key, svc.search(q, k=10).collect())) for q in queries]
+    assert before[0] == sorted(map(key, hits))
+    for df in served.values():
+        df.unpersist()
+    after = [sorted(map(key, svc.search(q, k=10).collect())) for q in queries]
+    assert after == before
 
 
 def test_console_parameter_surface(crawled):

@@ -13,7 +13,6 @@ from searchengine_spark.corpus import (
     raw_url_py,
 )
 from searchengine_spark.functions.spans import (
-    extract_links_udf,
     extract_spans_py,
     extract_spans_udf,
     resolve_href_py,
@@ -141,19 +140,3 @@ def test_href_resolution():
     assert resolve_href_py("https://a.com/p", "/rel") == "https://a.com/rel"
     assert resolve_href_py("a.com/p", "mailto:x@y") is None
     assert resolve_href_py("a.com/p", "rel/no/slash") is None
-
-
-def test_extract_links_udf_dedup_and_resolution(spark):
-    spans = [
-        {"kind": "link", "text": None, "media_ref": "/a", "offset": 0},
-        {"kind": "link", "text": None, "media_ref": "/a", "offset": 1},  # dup
-        {"kind": "link", "text": None, "media_ref": "//c.com/z", "offset": 2},
-        {"kind": "text", "text": "x", "media_ref": None, "offset": 3},
-        {"kind": "link", "text": None, "media_ref": "mailto:z", "offset": 4},
-    ]
-    df = spark.createDataFrame(
-        [("https://h.com/p", spans)],
-        "url string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
-    )
-    got = df.select(extract_links_udf(F.col("url"), F.col("spans")).alias("l")).collect()
-    assert got[0]["l"] == ["https://h.com/a", "https://c.com/z"]

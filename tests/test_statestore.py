@@ -162,29 +162,37 @@ def test_zero_row_partitioned_snapshot_readable(spark, tmp_path):
     ]
 
 
-def test_append_onto_zero_row_base(spark, tmp_path):
-    """The append schema pin must work against a zero-row partitioned
-    base (whose schema exists only in _schema.json), and the resulting
-    chain reads as just the delta."""
+def test_partitioned_append_is_refused(spark, tmp_path):
+    """A fast-append chain is one multi-root parquet load, which cannot
+    resolve partition columns spread over several roots. A partitioned
+    append is refused before anything is written — onto a non-empty
+    base and onto a zero-row base alike: the pointer and the version
+    dirs are unchanged, and the table still reads its last snapshot."""
+    import pytest
+
     st = TableStore(spark, str(tmp_path))
     df = spark.createDataFrame([(1, 3)], "id int, bucket int")
-    st.commit("t", df.limit(0), partition_by=["bucket"])
-    st.commit("t", df, mode="append", partition_by=["bucket"])
-    assert [(r["id"], r["bucket"]) for r in st.read("t").collect()] == [(1, 3)]
+    for base in (df, df.limit(0)):
+        st.commit("t", base, partition_by=["bucket"])
+        pointer = (tmp_path / "t" / "_latest").read_text()
+        dirs = sorted(os.listdir(tmp_path / "t"))
+        with pytest.raises(ValueError, match="unpartitioned tables only"):
+            st.commit("t", df, mode="append", partition_by=["bucket"])
+        assert (tmp_path / "t" / "_latest").read_text() == pointer
+        assert sorted(os.listdir(tmp_path / "t")) == dirs
+        assert st.read("t").count() == base.count()
 
 
 def test_partitioned_commit_writes_one_file_per_value(spark, tmp_path):
     """A partitioned commit clusters rows by the partition key first:
     input spread over 8 splits still lands as ONE parquet file per
-    partition value, in overwrite and append commits alike."""
+    partition value."""
     import glob
 
     st = TableStore(spark, str(tmp_path))
     df = spark.range(0, 400, 1, 8).selectExpr("id", "cast(id % 5 as int) AS bucket")
     st.commit("t", df, partition_by=["bucket"])
-    st.commit("t", df, mode="append", partition_by=["bucket"])
-    for snap in ("v000001", "v000002/delta"):
-        for b in range(5):
-            files = glob.glob(str(tmp_path / "t" / snap / f"bucket={b}" / "*.parquet"))
-            assert len(files) == 1, (snap, b, files)
-    assert st.read("t", version=1).count() == 400
+    for b in range(5):
+        files = glob.glob(str(tmp_path / "t" / "v000001" / f"bucket={b}" / "*.parquet"))
+        assert len(files) == 1, (b, files)
+    assert st.read("t").count() == 400
