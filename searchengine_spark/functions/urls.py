@@ -24,8 +24,11 @@ Reference quirks preserved on purpose (verified against the C source):
   "com"/"org" — so "a.com.cn" -> "a.com.cn", "x.a.com.cn" -> "a.com.cn".
 
 Every rule exists in three synchronized forms:
-  1. native Spark ``Column`` expressions (the engine's hot path — pure
-     JVM, whole-stage-codegen'd, DuckDB-mirrorable),
+  1. a Spark form: native ``Column`` expressions (pure JVM,
+     whole-stage-codegen'd, DuckDB-mirrorable) for canonicalize, md5
+     key, host split and registered domain; the crawl's url filter and
+     shard run in the Arrow parse kernel (make_parse_candidates_udf)
+     plus the inline salted hash60 in frontier.normalize_candidates,
   2. DuckDB SQL string builders (the correctness oracle),
   3. pure-Python scalars (the crawl-ordering oracle simulator) and a
      vectorized pandas UDF twin (north-rule API parity; tests assert it
@@ -37,7 +40,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, functions as F, types as T
 
-from searchengine_spark.functions.hashes import hash60, hash60_py, hash60_sql, md5_py
+from searchengine_spark.functions.hashes import hash60_py, hash60_sql, md5_py
 
 MAXURLLEN = 2048  # SearchEngine.h:16
 MAXURLPERHOST = 1_000_000  # SearchEngine.h:17
@@ -206,29 +209,6 @@ def registered_domain_expr(host: Column | str) -> Column:
     for k in range(2, _MAX_LABEL_EXTENSIONS + 2):
         expr = expr.when(~first3_ok(-k), last_k(k)).when(n <= k + 1, c)
     return expr.otherwise(c)  # past the bound: approximate with whole host
-
-
-def filter_url_expr(u: Column | str) -> Column:
-    c = F.col(u) if isinstance(u, str) else u
-    ln = F.length(c)
-    host = split_host_expr(c)
-    ext_ok = F.lit(True)
-    for ext in BLOCKED_EXTENSIONS:
-        ext_ok = ext_ok & ~((ln > 4) & c.endswith(ext))
-    return (
-        (ln >= 4)
-        & (ln <= MAXURLLEN)
-        & ext_ok
-        & (F.length(host) > 2)
-        & ~((F.length(host) > 3) & host.endswith(".jp"))
-    )
-
-
-def host_shard_expr(
-    host: Column | str, n_shards: int = DEFAULT_NSHARDS, salt: str = ""
-) -> Column:
-    rd = registered_domain_expr(host)
-    return F.pmod(hash60(rd, salt or None), F.lit(n_shards)).cast("int")
 
 
 # ---------------------------------------------------------------------------

@@ -12,10 +12,11 @@ term lookups by binary search (PageSearcher.cpp:39-67). Spark form:
   sorted `term` column give the same O(log N)-file-pruning effect as
   the reference's binary search when Catalyst pushes a term predicate.
 * small dict (A6): 8-byte-truncated terms keeping the max-rank
-  instance — a windowed reduction, not a second sorter.
-* search (J4/A8): per-term postings -> k-way inner join on doc ->
-  proximity co-rank 0.9^(posDiff-1) (PageSearcher.cpp:271-288) ->
-  top-K (TakeOrderedAndProject) -> host-dedup window (A9).
+  instance — an argmin-struct aggregate, not a second sorter.
+* search (J4/A8): one tagged pass over the dict -> PosRanks top-2 per
+  (doc, term) -> one pivot per doc (AND semantics) -> proximity co-rank
+  0.9^(posDiff-1) (PageSearcher.cpp:271-288) -> top-K -> host-dedup
+  window (A9).
 """
 
 from __future__ import annotations
@@ -486,45 +487,6 @@ def build_postings(
     )
 
 
-def shared_postings(postings: DataFrame, n_parts: int = 32) -> DataFrame:
-    """Pin ONE evaluation of an EPHEMERAL dict that several plan
-    branches consume (e.g. small-dict routing: main batch + small
-    batch + present-term probe all derive from the same build).
-
-    Mechanics: a term-keyed exchange every consumer hangs off — AQE
-    reuses canonically identical exchange subtrees within one action —
-    guarded by a fold-proof barrier: ``element_at(shuffle([true]), 1)``
-    is nondeterministic to the optimizer (shuffle()), so per-branch
-    filter pushdown and column pruning cannot specialize the subtree
-    below it and break the exchange identity. (A rand()-based barrier
-    does NOT survive: Spark 4 folds rand-vs-literal comparisons.) The
-    predicate is always true at runtime; rows pass through unchanged.
-
-    ONLY for one-shot ephemeral plans: a persisted dict wants the
-    opposite trade (pushdown into the parquet range scan).
-
-    Measured (round 5, idle box, order-controlled A/B at sf0.1,
-    local[32], warm steady state): search_smallterm ~8.2 s with the
-    shared exchange vs ~9.3 s with three independent builds — a ~12%
-    win. An earlier docstring claimed 10.2 -> 7.8 s; that figure was
-    never reproduced in any recorded bench and is retracted. The
-    first execution of this plan family costs ~2x extra either way
-    (python-worker spin-up + codegen), which is what one-shot bench
-    rows mostly measure.
-
-    r6 STATUS: the reuse only holds while the consumer branches stay
-    UN-re-aliased — any self-join/self-union between them makes the
-    analyzer deduplicate relations and the exchange subtrees lose
-    canonical identity (no reuse; measured: the routed search ran its
-    build once per frame). The search family was therefore moved to
-    single-lineage forms (_routed_top2, search_weighted_batch) that
-    need no sharing; this operator remains for simple fan-out shapes
-    (its test pins the mechanics it still guarantees) — see the
-    CLAUDE.md trap addenda."""
-    barrier = F.element_at(F.shuffle(F.array(F.lit(True))), 1)
-    return postings.repartition(n_parts, "term").where(barrier)
-
-
 def build_small_postings(postings: DataFrame, pos_col: str | None = None) -> DataFrame:
     """A6: truncate terms to SMALLWORDSIZE bytes, keep the max-rank
     instance per (doc, short term); deterministic tie-break by term.
@@ -559,71 +521,6 @@ def build_small_postings(postings: DataFrame, pos_col: str | None = None) -> Dat
             *[F.col(f"_m.{c}").alias(c) for c in carry],
             (-F.col("_m._nr")).alias("rank"),
         )
-    )
-
-
-def term_lookup(postings: DataFrame, term: str, max_postings: int = 10000) -> DataFrame:
-    """S13: single-term range scan; the maxSearch cap (PageSearcher.cpp:425)
-    is a deterministic limit by (rank desc, doc_id)."""
-    return (
-        postings.where(F.col("term") == term)
-        .orderBy(F.desc("rank"), "doc_id")
-        .limit(max_postings)
-    )
-
-
-def search(
-    postings: DataFrame,
-    terms: list[str],
-    docs_meta: DataFrame | None = None,
-    host_col: str = "host",
-    k: int = MAX_SHOW,
-) -> DataFrame:
-    """Multi-term AND search with proximity ranking.
-
-    J4: k-way inner join on doc_id (term 1 builds the hash side, terms
-    2..k require presence). A8: rank = sum(per-term rank) * coRank,
-    coRank = Π 0.9^(|pos_i - pos_{i+1}| - 1) clamped at 1e-6. O3:
-    top-K. A9 (optional docs_meta with a host column): best doc per
-    host + n_extra.
-    """
-    per_term = [
-        postings.where(F.col("term") == t).select(
-            "doc_id",
-            F.col("rank").alias(f"rank_{i}"),
-            F.col("first_pos").alias(f"pos_{i}"),
-        )
-        for i, t in enumerate(terms)
-    ]
-    joined = reduce(lambda a, b: a.join(b, "doc_id", "inner"), per_term)
-
-    sum_rank = reduce(lambda a, b: a + b, [F.col(f"rank_{i}") for i in range(len(terms))])
-    co = F.lit(1.0)
-    for i in range(len(terms) - 1):
-        diff = F.abs(F.col(f"pos_{i}") - F.col(f"pos_{i + 1}")) - 1
-        co = co * F.pow(F.lit(CORANK_DECAY), diff.cast("double"))
-    co = F.greatest(co, F.lit(CORANK_MIN))
-    scored = joined.select(
-        "doc_id", F.round(sum_rank * co, 6).alias("score")
-    ).orderBy(F.desc("score"), "doc_id").limit(k)
-
-    if docs_meta is None:
-        return scored
-    with_host = scored.join(
-        docs_meta.select(F.col("doc_id"), F.col(host_col).alias("host")), "doc_id"
-    )
-    w = W.partitionBy("host").orderBy(F.desc("score"), "doc_id")
-    return (
-        with_host.withColumn("_rn", F.row_number().over(w))
-        .withColumn("n_host_docs", F.count("*").over(W.partitionBy("host")))
-        .where(F.col("_rn") == 1)
-        .select(
-            "doc_id",
-            "score",
-            "host",
-            (F.col("n_host_docs") - 1).alias("n_more_from_host"),
-        )
-        .orderBy(F.desc("score"), "doc_id")
     )
 
 
@@ -938,7 +835,6 @@ def search_weighted_batch(
     host_col: str = "host",
     k: int = MAX_SHOW,
     max_search: int = MAX_SEARCH,
-    n_parts: int = 32,
 ) -> DataFrame:
     """Evaluate MANY queries against the dict in ONE action — the
     amortization a serve-one-query-at-a-time engine structurally cannot
@@ -952,13 +848,11 @@ def search_weighted_batch(
       ``_tagged_top2`` pass with a GLOBAL term index, so a term used by
       five queries is boundary-expanded and top-2-reduced once, not
       five times.
-    * PASS sharing: every per-query scoring branch hangs off one
-      doc-keyed exchange of the tagged-top2 frame, guarded by the same
-      fold-proof ``element_at(shuffle([true]),1)`` barrier as
-      :func:`shared_postings` (see CLAUDE.md trap: per-branch filter
-      pushdown below the exchange would break canonical-subtree reuse).
-      Every branch reads the same five columns — column pruning below
-      the exchange would likewise break reuse.
+    * PASS sharing: ONE pivot of the tagged-top2 frame over every
+      global term index; each query's score is a projection column of
+      that single frame, exploded into (query_id, score) rows. One
+      lineage, so the dict build is evaluated once without any
+      exchange-reuse machinery.
 
     Per-query semantics are EXACTLY :func:`search_weighted` (main-dict
     boundary expansion, PosRanks top-2, min-posdiff coRank, top-K, host
@@ -1249,9 +1143,7 @@ def _score_joined(
     docs_meta: DataFrame | None,
     host_col: str = "host",
 ) -> DataFrame:
-    from functools import reduce as _reduce
-
-    sum_rank = _reduce(lambda a, b: a + b, [F.col(f"trank_{i}") for i in range(n)])
+    sum_rank = reduce(lambda a, b: a + b, [F.col(f"trank_{i}") for i in range(n)])
     co = F.lit(1.0)
     for i in range(n - 1):
         diff = _min_posdiff(i, i + 1) - 1

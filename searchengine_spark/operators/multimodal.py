@@ -155,20 +155,3 @@ def media_stats(media: DataFrame) -> DataFrame:
         )
         .orderBy("media_type")
     )
-
-
-def frame_sample_plan(media: DataFrame, every_nth: int = 10) -> DataFrame:
-    """Video frame-sampling plumbing: expands frame indices Spark-side
-    (real decode would read only those frames). Deterministic frame
-    count from metadata; sampling itself is pure column algebra."""
-    frames = media.where(F.col("media_type") == "video/mp4").select(
-        "media_id",
-        F.explode(
-            F.sequence(
-                F.lit(0),
-                F.pmod(hash60(F.col("media_id"), "frames"), F.lit(100)),
-                F.lit(every_nth),
-            )
-        ).alias("frame_idx"),
-    )
-    return frames

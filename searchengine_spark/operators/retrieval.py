@@ -357,54 +357,35 @@ def more_like_this(
     k: int = 10,
     id_col: str = "doc_id",
     text_col: str = "text",
-    weights: DataFrame | None = None,
-    n_parts: int = 32,
 ) -> DataFrame:
     """Related-document retrieval: top-k docs by tf-idf cosine to the
     given document ("more like this" — the reference's console has no
     analogue; PageSearcher serves term queries only).
 
     Scale shape: the query doc's weight vector is ONE doc's vocabulary
-    — broadcast it and equi-join on term, so the corpus-sized postings
-    table is scanned once and only rows sharing a term with the query
-    doc survive (sparse dot product; never a doc×doc self-join). Dot
+    — broadcast it and equi-join on term, so only the corpus weight
+    rows sharing a term with the query doc survive (sparse dot product;
+    never a doc×doc self-join). Dot
     products are exact BIGINT sums of w_e3 products; norms are exact
     BIGINT sums of squares; the ONLY float step is the final
     round(dot / (sqrt(nq)·sqrt(nd)), 6) from identical integers.
     Zero-norm docs (every term corpus-universal) are excluded — a
     0/0 cosine is undefined, not similar.
 
-    Evaluation sharing: pass ``weights`` (a persisted
-    (doc_id, term, w_e3) table from :func:`tfidf_weights`) for the
-    production path — consumers read it with scan pushdown, the right
-    trade for persisted state. Without it the ephemeral tf-idf
-    derivation is pinned behind a doc_id-keyed exchange with the
-    fold-proof ``element_at(shuffle([true]),1)`` barrier
-    (operators/index.shared_postings mechanics + its Spark-version
-    coupling, see CLAUDE.md): the 3-column consumers (query vector,
-    its norm, the dot join) share ONE evaluation; the norm aggregation
-    prunes to 2 columns and is the second — column pruning reaches
-    below the exchange, so distinct column sets cannot share (the
-    pruning half of the CLAUDE.md trap). Two evaluations is the
-    ephemeral minimum without materializing: dots and norms aggregate
-    over different column sets by nature.
+    Evaluation: the tf-idf weights are derived inline and each consumer
+    (query vector, all-docs norms, the dot join) re-derives them from
+    the scan — a single-lineage plan with no barrier and no doc_id
+    exchange of the corpus-sized weights. Re-tokenizing per consumer
+    costs less than pinning one shared evaluation behind an exchange.
 
     Returns (doc_id, cosine, rank), rank 1..k by (cosine desc, doc_id).
     """
-    if weights is not None:
-        w = weights
-    else:
-        barrier = F.element_at(F.shuffle(F.array(F.lit(True))), 1)
-        w = (
-            tfidf_weights(docs, id_col, text_col)
-            .repartition(n_parts, "doc_id")
-            .where(barrier)
-        )
+    w = tfidf_weights(docs, id_col, text_col)
     qv = w.where(F.col("doc_id") == doc_id).select(
         "term", F.col("w_e3").alias("qw_e3")
     )
-    # query norm from the (tiny) query vector — NOT from the all-docs
-    # norms aggregate: this keeps it on the 3-column shared subtree
+    # query norm from the (tiny) query vector, not from the all-docs
+    # norms aggregate
     qnorm = qv.agg(
         F.sum(F.col("qw_e3") * F.col("qw_e3")).cast("long").alias("qnorm2")
     )

@@ -396,9 +396,8 @@ def embedding_near_dups(
         )
     )
     # the self-join would evaluate the bucket UDF once per side: hang
-    # both sides off ONE (table, bucket) exchange so AQE reuses it
-    # (the shared-ancestor pattern from index.shared_postings) — the
-    # numpy matmul and the upstream scan then run exactly once.
+    # both sides off ONE (table, bucket) exchange so AQE reuses it —
+    # the numpy matmul and the upstream scan then run exactly once.
     b = b.repartition("table", "bucket")
     x, y = b.alias("x"), b.alias("y")
     pairs = (

@@ -166,8 +166,15 @@ class SearchService:
         docs = self._docs_pinned()
         sections = doc_sections(docs)
         stream = tokenize_sections(sections, blocks_col="blocks").persist()
-        pr = rank_docs(docs).withColumnRenamed("url_md5", "doc_id").persist()
         self._anchors = self._build_anchor_index(docs).cache()
+
+        def _rank() -> DataFrame:
+            # built INSIDE the pool: pagerank's mid-loop localCheckpoint
+            # is eager, so building the frame runs most of the sweeps
+            pr = rank_docs(docs).withColumnRenamed("url_md5", "doc_id").persist()
+            pr.count()
+            return pr
+
         # materialize the token stream, the PageRank factor and the
         # anchor index as CONCURRENT jobs (guide §2.6): all three are
         # independent (the anchor build reads only docs spans), but
@@ -177,13 +184,12 @@ class SearchService:
         # the commit pool's longest pole. Same frames, same lineage —
         # only the materialization overlaps.
         with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = [
-                pool.submit(stream.count),
-                pool.submit(pr.count),
-                pool.submit(self._anchors.count),
-            ]
-            for f in futs:
-                f.result()
+            stream_fut = pool.submit(stream.count)
+            pr_fut = pool.submit(_rank)
+            anchors_fut = pool.submit(self._anchors.count)
+            stream_fut.result()
+            pr = pr_fut.result()
+            anchors_fut.result()
         unsorted = build_weighted_postings(
             sections,
             page_rank=pr,

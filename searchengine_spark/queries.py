@@ -2527,11 +2527,9 @@ def q_search_smallterm(spark, sf_dir):
     docs_meta = spread_scan(_docs(spark, sf_dir)).select(
         "doc_id", F.col("source").alias("host")
     )
-    # r6: the routed search is single-lineage (operators/index._routed_top2
+    # the routed search is single-lineage: operators/index._routed_top2
     # fuses the main batch, the small-dict arm and the presence probe
-    # into ONE tagged pass), so the shared_postings barrier that used to
-    # pin one dict evaluation across three consumer frames is no longer
-    # needed here
+    # into ONE tagged pass, so the dict is evaluated once
     p = _wpostings_blocks(spark, sf_dir, sorted_output=False)
     small = IX.build_small_postings(p, pos_col="pos")
     return IX.search_weighted(p, SMALLROUTE_TERMS, docs_meta, k=50, small=small)

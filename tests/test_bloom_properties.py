@@ -13,7 +13,7 @@ no block is always a suspect.
 import dataclasses
 
 import numpy as np
-from hypothesis import given, settings, strategies as st
+from hypothesis import Phase, given, settings, strategies as st
 
 from searchengine_spark.config import CrawlConfig
 from searchengine_spark.operators.seen import (
@@ -46,7 +46,13 @@ def _probe_np(shards, pos, block_map):
     bits=st.sampled_from([1 << 10, 1 << 16]),
     k=st.integers(1, 4),
 )
-@settings(max_examples=10, deadline=None)
+# no shrink phase: each example runs Spark jobs, so shrinking a
+# failure would take minutes; the failing example is reported as is
+@settings(
+    max_examples=10,
+    deadline=None,
+    phases=[Phase.explicit, Phase.reuse, Phase.generate],
+)
 def test_native_probe_equals_numpy_probe(spark, seen, fresh, bits, k):
     cfg = dataclasses.replace(
         CrawlConfig(), n_shards=N_SHARDS, bloom_bits_per_shard=bits, bloom_hashes=k

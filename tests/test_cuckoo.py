@@ -13,7 +13,7 @@ import hashlib
 
 import numpy as np
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import Phase, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from searchengine_spark.config import CrawlConfig
@@ -127,7 +127,13 @@ md5s = st.binary(min_size=16, max_size=16).map(bytes.hex)
     nb=st.sampled_from([8, 32]),
     bsize=st.sampled_from([2, 4]),
 )
-@settings(max_examples=6, deadline=None)
+# no shrink phase: each example runs Spark jobs, so shrinking a
+# failure would take minutes; the failing example is reported as is
+@settings(
+    max_examples=6,
+    deadline=None,
+    phases=[Phase.explicit, Phase.reuse, Phase.generate],
+)
 def test_native_probe_equals_numpy_probe(
     spark, big, few, dup, seed, fresh, nb, bsize
 ):

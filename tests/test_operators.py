@@ -3,7 +3,7 @@ pagerank, index/search, multimodal plumbing."""
 
 import numpy as np
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import Phase, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from searchengine_spark.operators import dedup as DD
@@ -420,14 +420,6 @@ def test_postings_and_search(spark):
     assert rows[("apple", "d1")]["tf"] == 2
     assert rows[("apple", "d1")]["first_pos"] == 1
     assert rows[("banana", "d2")]["tf"] == 3
-    # multi-term AND: only docs with both terms
-    res = IX.search(p, ["apple", "cherry"], docs.select("doc_id", "host"))
-    got = [r["doc_id"] for r in res.collect()]
-    assert set(got) == {"d1", "d3"}  # d2 has no apple
-    # host-dedup: d1 and d3 differ in host -> both kept
-    res2 = IX.search(p, ["banana"], docs.select("doc_id", "host"))
-    hosts = [r["host"] for r in res2.collect()]
-    assert hosts.count("h1") == 1  # d1,d2 same host -> best only
 
 
 def test_small_postings_max_rank(spark):
@@ -540,13 +532,6 @@ def test_decode_bmp_real_format(spark):
     )
     expect = np.round(hist / hist.sum(), 6).tolist()
     assert feats[0]["features"] == expect
-
-
-def test_frame_sample_plan(spark):
-    frames = MM.frame_sample_plan(MM.synth_media_df(spark, SF), every_nth=10)
-    rows = frames.collect()
-    assert all(r["frame_idx"] % 10 == 0 for r in rows)
-    assert len(rows) > 0
 
 
 def test_parse_query_and_search_query(spark):
@@ -1012,10 +997,10 @@ def test_semdedup_clones_share_cluster_and_match_lsh(spark):
 
 def test_search_weighted_batch_matches_single(spark):
     """Every arm of a batched search returns exactly the single-query
-    search_weighted rows (plus query_id) — term sharing and the
-    shared-pass barrier must not change any score, host dedup, or
-    AND semantics — and the fold-proof barrier survives optimization
-    (same Spark-version coupling as shared_postings, see CLAUDE.md)."""
+    search_weighted rows (plus query_id) — term sharing and the one
+    shared pivot must not change any score, host dedup, or AND
+    semantics — and the batch stays a single lineage (no per-query
+    branches)."""
     p = spark.createDataFrame(
         [
             ("alpha", "d1", 10, 0.5), ("beta", "d1", 12, 0.3),
@@ -1477,7 +1462,13 @@ def _small_graphs(draw):
 
 @pytest.mark.parametrize("radius", [0, 1, 2, 3, 4])
 @given(graph=_small_graphs())
-@settings(max_examples=2, deadline=None)
+# no shrink phase: each example runs Spark jobs, so shrinking a
+# failure would take minutes; the failing example is reported as is
+@settings(
+    max_examples=2,
+    deadline=None,
+    phases=[Phase.explicit, Phase.reuse, Phase.generate],
+)
 def test_neighborhood_function_equals_union_form(spark, radius, graph):
     """The self-loop sweep (one join + one aggregate per hop) yields the
     same estimate per node as the union form at k in {2, 3, 16}, on

@@ -223,81 +223,16 @@ def test_term_lookup_pushdown_on_sorted_postings(spark, tmp_path):
     parquet reaches the scan as a pushed filter (min/max stats then
     prune to the O(1) files that can contain the term — the reference's
     binary search over the sorted flat dict, PageSearcher.cpp:39-67)."""
-    from searchengine_spark.operators.index import build_postings, term_lookup
+    from searchengine_spark.operators.index import build_postings
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     path = str(tmp_path / "postings")
     build_postings(docs).write.mode("overwrite").parquet(path)
     p = spark.read.parquet(path)
-    q = term_lookup(p, "sort", max_postings=100)
+    q = p.where(F.col("term") == "sort")
     q.collect()
     plan = _plan(q)
     assert "PushedFilters" in plan and "EqualTo(term,sort)" in plan, plan[:1500]
-
-
-def test_shared_postings_barrier_survives_optimizer(spark):
-    """shared_postings' fold-proof barrier must survive optimization
-    (a rand()-based one is silently folded by Spark 4): the final plan
-    keeps the shuffle() predicate above ONE term-keyed exchange, and
-    row content is unchanged.
-
-    SPARK-VERSION COUPLING (see CLAUDE.md known traps): exchange reuse
-    depends on (a) `shuffle()` staying nondeterministic-to-Catalyst so
-    per-branch pushdown can't specialize the subtree below the barrier,
-    and (b) AQE reusing canonically identical exchanges. Both held up
-    to Spark 4.1; a Spark upgrade can silently break either."""
-    from searchengine_spark.operators import index as IX
-
-    p = spark.createDataFrame(
-        [("alpha", "d1", 1, 0.5), ("beta", "d2", 2, 0.4)],
-        "term string, doc_id string, pos int, rank double",
-    )
-    shared = IX.shared_postings(p, n_parts=4)
-    # both consumer branches must read the SAME columns: column pruning
-    # reaches below the exchange, so branches with different column
-    # sets get different canonical subtrees and NO reuse (CLAUDE.md
-    # trap) — the real search consumers all read all four dict columns
-    a = shared.groupBy("term").agg(
-        F.count("doc_id").alias("count"), F.sum("rank").alias("r"),
-        F.min("pos").alias("mp"),
-    )
-    b = shared.groupBy("doc_id").agg(
-        F.count("term").alias("c2"), F.sum("rank").alias("r2"),
-        F.min("pos").alias("mp2"),
-    )
-    out = a.join(b, a["count"] == b["c2"])
-    out.collect()
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "shuffle(" in plan, (
-        "shared_postings' element_at(shuffle([true]),1) barrier was "
-        "optimized away — this Spark version folds or strips the "
-        "nondeterministic shuffle() predicate, so every consumer branch "
-        "re-evaluates the dict build (search_smallterm regresses ~3x). "
-        "Find a new fold-proof barrier (operators/index.py "
-        "shared_postings) before trusting any multi-consumer dict plan."
-    )
-    # AQE prints a REUSED query stage by repeating the subtree with the
-    # SAME plan_id: all term-exchange prints in the final plan must be
-    # the one exchange object (distinct plan_ids = branches each built
-    # their own dict)
-    import re
-
-    final = plan.split("== Initial Plan ==")[0]
-    ids = set(
-        re.findall(
-            r"Exchange hashpartitioning\(term#\d+, \d+\), REPARTITION_BY_NUM,"
-            r" \[plan_id=(\d+)\]",
-            final,
-        )
-    )
-    assert len(ids) == 1, (
-        "the term-keyed exchange under shared_postings is no longer "
-        "REUSED across consumer branches (AQE exchange-reuse behavior "
-        f"changed — {len(ids)} distinct exchange plan_ids {ids}): each "
-        "branch now pays its own dict build. Plan:\n" + final[:2000]
-    )
-    rows = sorted((r["term"], r["doc_id"]) for r in shared.collect())
-    assert rows == [("alpha", "d1"), ("beta", "d2")]
 
 
 def test_seen_filter_cogroup_matches_broadcast(spark):

@@ -193,7 +193,12 @@ def test_more_like_this_hand_computed(spark):
     docs = spark.createDataFrame(
         sorted(corpus.items()), "doc_id long, text string"
     )
-    out = RET.more_like_this(docs, 1, k=10).collect()
+    res = RET.more_like_this(docs, 1, k=10)
+    out = res.collect()
+    # single lineage: no element_at(shuffle([true]),1) barrier
+    assert "shuffle(" not in (
+        res._jdf.queryExecution().executedPlan().toString()
+    )
     # python twin
     n = len(corpus)
     words = {d: t.split(" ") for d, t in corpus.items()}
@@ -238,41 +243,6 @@ def test_more_like_this_hand_computed(spark):
     # layout independence
     again = RET.more_like_this(docs.repartition(5), 1, k=10).collect()
     assert sorted(map(tuple, again)) == sorted(map(tuple, out))
-
-
-def test_more_like_this_shared_evaluation_and_weights_path(spark, tmp_path):
-    """The ephemeral tf-idf derivation is pinned behind the fold-proof
-    barrier (shared_postings mechanics — same Spark-version coupling,
-    see CLAUDE.md) and AQE reuses the doc_id-keyed exchange across the
-    3-column consumers; the persisted-weights path returns identical
-    rows with plain scan pushdown (no barrier)."""
-    docs = spark.createDataFrame(
-        [(1, "x y z"), (2, "x y q"), (3, "z z w"), (6, "x y z")],
-        "doc_id long, text string",
-    )
-    out = RET.more_like_this(docs, 1, k=10)
-    rows = sorted(map(tuple, out.collect()))
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "shuffle(" in plan, (
-        "more_like_this's element_at(shuffle([true]),1) barrier was "
-        "optimized away — every consumer re-derives the tf-idf table "
-        "(4 corpus scans instead of 2). Same regression class as "
-        "shared_postings; see CLAUDE.md."
-    )
-    assert "ReusedExchange" in plan, (
-        "AQE did not reuse the doc_id-keyed tf-idf exchange — the "
-        "3-column consumers (query vector / its norm / the dot join) "
-        "each re-evaluate the derivation"
-    )
-    # persisted path: same rows, no barrier in the plan
-    wpath = str(tmp_path / "w.parquet")
-    RET.tfidf_weights(docs).write.parquet(wpath)
-    wp = spark.read.parquet(wpath)
-    out2 = RET.more_like_this(docs, 1, k=10, weights=wp)
-    assert sorted(map(tuple, out2.collect())) == rows
-    assert "shuffle(" not in (
-        out2._jdf.queryExecution().executedPlan().toString()
-    )
 
 
 def test_textrank_keywords_hand_computed(spark):

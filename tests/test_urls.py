@@ -86,8 +86,6 @@ def test_md5_host_shard_pipeline(spark, urls_df):
             U.url_md5_expr("c").alias("m"),
             U.split_host_expr("c").alias("h"),
             U.registered_domain_expr(U.split_host_expr("c")).alias("rd"),
-            U.host_shard_expr(U.split_host_expr("c"), 16, "s0").alias("sh"),
-            U.filter_url_expr("c").alias("keep"),
         )
     )
     for r in df.collect():
@@ -96,8 +94,6 @@ def test_md5_host_shard_pipeline(spark, urls_df):
         host = U.split_host_py(c)
         assert r["h"] == host, c
         assert r["rd"] == U.registered_domain_py(host), host
-        assert r["sh"] == U.host_shard_py(host, 16, "s0"), host
-        assert r["keep"] == U.filter_url_py(c), c
 
 
 def test_registered_domain_udf_and_sql(spark, urls_df):
